@@ -1489,8 +1489,8 @@ def hudi_hfile_block_read(spark, sf_dir):
     Hudi log refusal): the delta upserts+inserts ride an
     HFILE_DATA_BLOCK whose content is a complete HBase HFile
     (sources/hfile_lite.py — v3 trailer, SNAPPY-compressed blocks
-    (Hadoop block framing over raw snappy, sources/snappy_lite.py,
-    r12), CRC32C per-block checksums, mvcc vlongs, i.e. the whole
+    (Hadoop block framing over raw snappy chunks coded by pyarrow),
+    CRC32C per-block checksums, mvcc vlongs, i.e. the whole
     RFC-84 surface), row key = record key, cell value = a bare Avro
     datum.  A v3 delete block follows, and the MOR snapshot merge must
     produce identical per-key latest-wins state at each instant.  The

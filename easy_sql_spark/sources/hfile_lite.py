@@ -1,4 +1,4 @@
-"""HBase HFile v2/v3 codec — pure stdlib, for Hudi HFILE payloads.
+"""HBase HFile v2/v3 codec, for Hudi HFILE payloads.
 
 Hudi stores METADATA TABLE file groups (and ``HFILE_DATA_BLOCK``s,
 ``HoodieLogBlockType`` ordinal 4) as HBase HFiles: row key = record
@@ -7,7 +7,8 @@ the public HFile specification (HBase book appendix "HFile format",
 ``org.apache.hadoop.hbase.io.hfile`` — FixedFileTrailer, HFileBlock,
 HFileWriterImpl) restricted to the subset Hudi's own HBase-free native
 reader pins down in RFC-84 ("HFile format for Hudi"): v2/v3 trailers,
-NONE/GZ compression, no encryption, no data-block encoding, cells in
+NONE/GZ compression (plus SNAPPY/LZ4, coded by pyarrow inside Hadoop's
+block framing), no encryption, no data-block encoding, cells in
 ``KeyValue`` layout.
 
 File layout (write order)::
@@ -31,7 +32,7 @@ Every block starts with the 33-byte checksummed header (minor version
     4  bytesPerChecksum
     4  onDiskDataSizeWithHeader  (header+data EXCLUDING checksums)
 
-followed by the (possibly gzip) data and one 4-byte BE checksum per
+followed by the (possibly compressed) data and one 4-byte BE checksum per
 ``bytesPerChecksum`` chunk of header+data.  Cells are ``KeyValue``::
 
     4  key length    4  value length
@@ -312,6 +313,102 @@ def _write_trailer(
     )
 
 
+# ------------------------------------------------- hadoop block framing
+#
+# HBase SNAPPY / LZ4 blocks go through Hadoop's SnappyCodec / Lz4Codec,
+# whose BlockCompressorStream frames raw codec output::
+#
+#     repeat:
+#       int32 BE   uncompressed length of this block
+#       repeat until the block's bytes are produced:
+#         int32 BE   compressed chunk length
+#         bytes      one raw Snappy / LZ4 block
+#
+# pyarrow codes the chunks; only the framing lives here.
+
+_HADOOP_BLOCK_SIZE = 256 * 1024
+# A raw LZ4 block carries no length, so each chunk is read as a
+# one-block frame: magic, FLG (independent blocks), BD (4 MB), checksum.
+_LZ4_CHUNK_FRAME = bytes.fromhex("04224d18607073")
+
+
+def _snappy_length(chunk: bytes) -> int:
+    """The uncompressed length a raw Snappy chunk declares (varint)."""
+    n = 0
+    for i, b in enumerate(chunk[:5]):
+        n |= (b & 0x7F) << (7 * i)
+        if not b & 0x80:
+            return n
+    raise HFileError("bad snappy chunk length varint")
+
+
+def _decode_chunk(codec: str, chunk: bytes, room: int) -> bytes:
+    import pyarrow as pa
+
+    try:
+        if codec == "snappy":
+            size = _snappy_length(chunk)
+            if size > room:
+                raise HFileError("snappy chunk overruns its hadoop block")
+            return pa.Codec("snappy").decompress(
+                chunk, decompressed_size=size, asbytes=True
+            )
+        frame = (
+            _LZ4_CHUNK_FRAME + struct.pack("<I", len(chunk)) + chunk
+            + b"\x00\x00\x00\x00"
+        )
+        return pa.input_stream(pa.py_buffer(frame), compression="lz4").read()
+    except (OSError, pa.ArrowException) as e:
+        raise HFileError("corrupt %s chunk: %s" % (codec, e)) from e
+
+
+def hadoop_block_decompress(data: bytes, codec: str) -> bytes:
+    """Decode Hadoop block framing over ``"snappy"`` or ``"lz4"`` chunks."""
+    out = bytearray()
+    pos, n = 0, len(data)
+    while pos < n:
+        if pos + 4 > n:
+            raise HFileError("truncated hadoop block header")
+        (orig,) = struct.unpack_from(">i", data, pos)
+        pos += 4
+        if orig < 0:
+            raise HFileError("negative hadoop block length %d" % orig)
+        produced = 0
+        while produced < orig:
+            if pos + 4 > n:
+                raise HFileError("truncated hadoop chunk header")
+            (clen,) = struct.unpack_from(">i", data, pos)
+            pos += 4
+            if clen < 0 or pos + clen > n:
+                raise HFileError("hadoop chunk overruns input")
+            chunk = _decode_chunk(codec, data[pos : pos + clen], orig - produced)
+            pos += clen
+            out += chunk
+            produced += len(chunk)
+        if produced != orig:
+            raise HFileError(
+                "hadoop block produced %d bytes, header says %d"
+                % (produced, orig)
+            )
+    return bytes(out)
+
+
+def hadoop_block_compress(data: bytes, codec: str) -> bytes:
+    """Encode with Hadoop block framing, one chunk per block (the shape
+    every Hadoop-ecosystem decompressor accepts)."""
+    import pyarrow as pa
+
+    chunk_codec = pa.Codec("lz4_raw" if codec == "lz4" else codec)
+    if not data:
+        return struct.pack(">i", 0)
+    out = bytearray()
+    for start in range(0, len(data), _HADOOP_BLOCK_SIZE):
+        block = data[start : start + _HADOOP_BLOCK_SIZE]
+        comp = chunk_codec.compress(block, asbytes=True)
+        out += struct.pack(">ii", len(block), len(comp)) + comp
+    return bytes(out)
+
+
 # --------------------------------------------------------------- blocks
 
 
@@ -347,24 +444,11 @@ def _read_block(data: bytes, offset: int, compression: str):
     body = checked[HEADER_SIZE:]
     if compression == "gz":
         body = gzip.decompress(body)
-    elif compression == "snappy":
-        # HBase snappy = Hadoop SnappyCodec = block framing over raw
-        # snappy chunks (sources/snappy_lite.py, JVM-cross-checked)
-        from .snappy_lite import hadoop_block_decompress
-
-        body = hadoop_block_decompress(bytes(body))
-    elif compression == "lz4":
-        # HBase lz4 = Hadoop Lz4Codec = the SAME block framing over raw
-        # lz4 block chunks (lz4_lite supplies the chunk codec)
-        from .lz4_lite import lz4_block_decompress
-        from .snappy_lite import hadoop_block_decompress
-
-        body = hadoop_block_decompress(
-            bytes(body), chunk_codec=lz4_block_decompress
-        )
+    elif compression in ("snappy", "lz4"):
+        body = hadoop_block_decompress(bytes(body), compression)
     elif compression != "none":
-        # zstd/lzo/bzip2 stay loud refusals: no stdlib codec exists and
-        # guessing bytes is exactly what this module refuses to do
+        # zstd/lzo/bzip2 stay loud refusals: guessing bytes is exactly
+        # what this module refuses to do
         raise HFileUnsupportedError(
             "hfile compression codec %r" % compression
         )
@@ -514,17 +598,8 @@ def _build_block(
 ) -> bytes:
     if compression == "gz":
         stored = gzip.compress(body, mtime=0)
-    elif compression == "snappy":
-        from .snappy_lite import hadoop_block_compress
-
-        stored = hadoop_block_compress(body)
-    elif compression == "lz4":
-        from .lz4_lite import lz4_block_compress
-        from .snappy_lite import hadoop_block_compress
-
-        stored = hadoop_block_compress(
-            body, chunk_codec=lz4_block_compress
-        )
+    elif compression in ("snappy", "lz4"):
+        stored = hadoop_block_compress(body, compression)
     else:
         stored = body
     on_disk_data_with_header = HEADER_SIZE + len(stored)

@@ -1,4 +1,4 @@
-"""Puffin file format + Iceberg v3 deletion-vector blobs — pure stdlib.
+"""Puffin file format + Iceberg v3 deletion-vector blobs.
 
 Puffin is Iceberg's container for index/statistics blobs (the public
 format spec, iceberg docs "Puffin spec"); Iceberg v3 stores DELETION
@@ -13,10 +13,9 @@ File layout::
     4  bytes  magic ``PFA1``
     blobs     concatenated, byte-addressed by the footer / manifest
     4  bytes  magic ``PFA1``          (footer start)
-    payload   FileMetadata JSON (optionally lz4-compressed)
+    payload   FileMetadata JSON (optionally one LZ4 frame)
     4  bytes  int32 LE payload length
-    4  bytes  flags (bit 0 of byte 0: payload compressed -> refused,
-              lz4 is not in the stdlib)
+    4  bytes  flags (bit 0 of byte 0: payload compressed)
     4  bytes  magic ``PFA1``          (file end)
 
 ``deletion-vector-v1`` blob layout (Iceberg spec §Deletion vectors)::
@@ -140,6 +139,104 @@ def read_dv_blob_from_file(path: str, offset: int, size: int) -> list[int]:
     return decode_dv_blob(blob)
 
 
+# ------------------------------------------------------------- lz4 footer
+#
+# The spec's one footer codec is "a single LZ4 compression frame with
+# content size present".  pyarrow reads any LZ4 frame, but its writer
+# omits the content size, so the frame is assembled here around
+# pyarrow's raw LZ4 blocks.  pyarrow does not expose xxHash32, which
+# the frame's header and content checksums use.
+
+_M32 = 0xFFFFFFFF
+_P1, _P2, _P3, _P4, _P5 = (
+    2654435761,
+    2246822519,
+    3266489917,
+    668265263,
+    374761393,
+)
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def xxh32(data: bytes, seed: int = 0) -> int:
+    """xxHash32 of ``data`` (reference spec, Cyan4973/xxHash)."""
+    n = len(data)
+    i = 0
+    if n >= 16:
+        v1 = (seed + _P1 + _P2) & _M32
+        v2 = (seed + _P2) & _M32
+        v3 = seed & _M32
+        v4 = (seed - _P1) & _M32
+        limit = n - 16
+        while i <= limit:
+            l1, l2, l3, l4 = struct.unpack_from("<IIII", data, i)
+            v1 = (_rotl32((v1 + l1 * _P2) & _M32, 13) * _P1) & _M32
+            v2 = (_rotl32((v2 + l2 * _P2) & _M32, 13) * _P1) & _M32
+            v3 = (_rotl32((v3 + l3 * _P2) & _M32, 13) * _P1) & _M32
+            v4 = (_rotl32((v4 + l4 * _P2) & _M32, 13) * _P1) & _M32
+            i += 16
+        h = (
+            _rotl32(v1, 1) + _rotl32(v2, 7) + _rotl32(v3, 12) + _rotl32(v4, 18)
+        ) & _M32
+    else:
+        h = (seed + _P5) & _M32
+    h = (h + n) & _M32
+    while i + 4 <= n:
+        (l,) = struct.unpack_from("<I", data, i)
+        h = (_rotl32((h + l * _P3) & _M32, 17) * _P4) & _M32
+        i += 4
+    while i < n:
+        h = (_rotl32((h + data[i] * _P5) & _M32, 11) * _P1) & _M32
+        i += 1
+    h ^= h >> 15
+    h = (h * _P2) & _M32
+    h ^= h >> 13
+    h = (h * _P3) & _M32
+    h ^= h >> 16
+    return h
+
+
+LZ4_FRAME_MAGIC = 0x184D2204
+_LZ4_BLOCK_MAX = 1 << 20  # BD code 6
+
+
+def lz4_frame_compress(data: bytes) -> bytes:
+    """One LZ4 frame with content size and content checksum present and
+    independent 1 MB blocks, stored raw where LZ4 does not shrink them."""
+    import pyarrow as pa
+
+    codec = pa.Codec("lz4_raw")
+    # FLG: version 01, independent blocks, content size, content
+    # checksum; BD: 1 MB blocks
+    header = bytes([0x6C, 6 << 4]) + struct.pack("<Q", len(data))
+    out = bytearray(struct.pack("<I", LZ4_FRAME_MAGIC) + header)
+    out.append((xxh32(header) >> 8) & 0xFF)
+    for at in range(0, len(data), _LZ4_BLOCK_MAX):
+        block = data[at : at + _LZ4_BLOCK_MAX]
+        comp = codec.compress(block, asbytes=True)
+        if len(comp) < len(block):
+            out += struct.pack("<I", len(comp)) + comp
+        else:
+            out += struct.pack("<I", 0x80000000 | len(block)) + block
+    out += struct.pack("<II", 0, xxh32(data))  # EndMark, content checksum
+    return bytes(out)
+
+
+def lz4_frame_decompress(payload: bytes) -> bytes:
+    """Decode one LZ4 frame; any malformed input raises PuffinError."""
+    import pyarrow as pa
+
+    if not payload:
+        raise PuffinError("puffin footer lz4 payload is empty")
+    try:
+        return pa.input_stream(pa.py_buffer(payload), compression="lz4").read()
+    except (OSError, pa.ArrowException) as e:
+        raise PuffinError("puffin footer lz4 payload corrupt: %s" % e) from e
+
+
 # ---------------------------------------------------------------- container
 def write_puffin(
     blobs: list[tuple[str, bytes, dict]],
@@ -172,8 +269,6 @@ def write_puffin(
     ).encode()
     flags = b"\x00\x00\x00\x00"
     if compress_footer:
-        from .lz4_lite import lz4_frame_compress
-
         payload = lz4_frame_compress(payload)
         flags = b"\x01\x00\x00\x00"
     out += [
@@ -189,10 +284,8 @@ def write_puffin(
 def read_puffin_footer(data: bytes) -> dict:
     """FileMetadata JSON out of a Puffin file's footer.
 
-    Compressed footers (flags bit 0 of byte 0 — the spec's only footer
-    codec, "lz4: single LZ4 compression frame with content size
-    present") decode through the pure-Python frame reader in
-    ``lz4_lite`` (JVM-cross-validated against ``net.jpountz.lz4``).
+    Compressed footers (flags bit 0 of byte 0) hold one LZ4 frame,
+    decoded by pyarrow; see :func:`lz4_frame_decompress`.
     """
     if data[:4] != MAGIC or data[-4:] != MAGIC:
         raise PuffinError("not a puffin file (bad magic)")
@@ -203,10 +296,5 @@ def read_puffin_footer(data: bytes) -> dict:
         raise PuffinError("puffin footer framing corrupt")
     payload = data[pstart : pstart + psize]
     if flags[0] & 0x01:
-        from .lz4_lite import Lz4Error, lz4_frame_decompress
-
-        try:
-            payload = lz4_frame_decompress(payload)
-        except Lz4Error as e:
-            raise PuffinError("puffin footer lz4 payload corrupt: %s" % e)
+        payload = lz4_frame_decompress(payload)
     return json.loads(payload)

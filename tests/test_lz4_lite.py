@@ -1,24 +1,30 @@
-"""lz4_lite vs the real LZ4 inside Spark's JVM (net.jpountz.lz4).
+"""LZ4 in the package vs the real LZ4 inside Spark's JVM (net.jpountz.lz4).
 
-Same discipline as the Roaring64/Kryo work: the pure-Python codec is
-cross-validated against the battle-tested implementation Spark already
-ships (lz4-java, Spark's own shuffle/broadcast codec), in BOTH
-directions — our frames decode under ``LZ4FrameInputStream``, JVM
-frames decode here — plus published xxHash32 vectors and adversarial
-truncation/corruption cases.
+Two entry points carry LZ4: puffin's frame writer/reader (footer
+payloads) and hfile_lite's Hadoop block framing (raw LZ4 chunks).
+Both are cross-validated against lz4-java, Spark's own
+shuffle/broadcast codec, in BOTH directions — our frames decode under
+``LZ4FrameInputStream``, JVM frames decode here — plus published
+xxHash32 vectors and adversarial truncation/corruption cases.
 """
 
 from __future__ import annotations
 
 import json
 import random
+import struct
 
+import pyarrow as pa
 import pytest
 
-from easy_sql_spark.sources.lz4_lite import (
-    Lz4Error,
-    lz4_block_compress,
-    lz4_block_decompress,
+from easy_sql_spark.sources.hfile_lite import (
+    HFileError,
+    hadoop_block_compress,
+    hadoop_block_decompress,
+)
+from easy_sql_spark.sources.puffin import (
+    LZ4_FRAME_MAGIC,
+    PuffinError,
     lz4_frame_compress,
     lz4_frame_decompress,
     xxh32,
@@ -41,7 +47,12 @@ def _corpus():
         big += rng.choice([b"alpha", b"beta", b"gamma", b"delta-delta"])
         if rng.random() < 0.1:
             big += bytes(rng.randrange(256) for _ in range(rng.randrange(20)))
-    yield bytes(big)  # > one 64KB block at code 4
+    yield bytes(big)  # > one 64KB block
+
+
+def _framed(orig: int, chunk: bytes) -> bytes:
+    """One Hadoop block of ``orig`` bytes carried by a single chunk."""
+    return struct.pack(">ii", orig, len(chunk)) + chunk
 
 
 # ------------------------------------------------------------ pure python
@@ -58,37 +69,71 @@ def test_xxh32_published_vectors():
 
 def test_block_roundtrip():
     for data in _corpus():
-        comp = lz4_block_compress(data)
-        assert lz4_block_decompress(comp) == data
+        framed = hadoop_block_compress(data, "lz4")
+        assert hadoop_block_decompress(framed, "lz4") == data
 
 
-def test_frame_roundtrip_all_block_sizes():
-    for data in _corpus():
-        for code in (4, 5, 6, 7):
-            frame = lz4_frame_compress(data, block_max_code=code)
-            assert lz4_frame_decompress(frame) == data
+def test_frame_roundtrip_across_block_boundary():
+    rng = random.Random(5)
+    mb = 1 << 20
+    cases = list(_corpus()) + [
+        b"\x01" * (mb - 1),
+        b"\x02" * mb,
+        b"\x03" * (mb + 1),
+        bytes(rng.randbytes(mb + 7)),  # incompressible -> stored blocks
+        (b"spam and eggs " * 200_000)[: 2 * mb + mb // 2],
+    ]
+    for data in cases:
+        assert lz4_frame_decompress(lz4_frame_compress(data)) == data
+
+
+def _frame_header(flg: int, content_size: int | None = None) -> bytes:
+    desc = bytes([flg, 6 << 4])
+    if content_size is not None:
+        desc += struct.pack("<Q", content_size)
+    return (
+        struct.pack("<I", LZ4_FRAME_MAGIC)
+        + desc
+        + bytes([(xxh32(desc) >> 8) & 0xFF])
+    )
 
 
 def test_frame_rejects_corruption():
-    frame = bytearray(lz4_frame_compress(b"hello world " * 100))
-    with pytest.raises(Lz4Error):
-        lz4_frame_decompress(bytes(frame[:10]))  # truncated
-    bad = bytes(frame[:4]) + b"\xff" + bytes(frame[5:])
-    with pytest.raises(Lz4Error):
+    body = b"hello world " * 100
+    frame = lz4_frame_compress(body)
+    with pytest.raises(PuffinError):
+        lz4_frame_decompress(frame[:10])  # truncated
+    with pytest.raises(PuffinError):
+        lz4_frame_decompress(frame[:-6])  # truncated inside the EndMark
+    bad = frame[:4] + b"\xff" + frame[5:]
+    with pytest.raises(PuffinError):
         lz4_frame_decompress(bad)  # header checksum / version
+    hc = bytearray(frame)
+    hc[14] ^= 0x01  # header checksum byte
+    with pytest.raises(PuffinError):
+        lz4_frame_decompress(bytes(hc))
     flipped = bytearray(frame)
     flipped[-1] ^= 0xFF  # content checksum byte
-    with pytest.raises(Lz4Error):
+    with pytest.raises(PuffinError):
         lz4_frame_decompress(bytes(flipped))
-    with pytest.raises(Lz4Error):
+    wrong_size = _frame_header(0x6C, len(body) - 1) + frame[15:]
+    with pytest.raises(PuffinError):
+        lz4_frame_decompress(wrong_size)
+    with pytest.raises(PuffinError):
+        lz4_frame_decompress(frame + b"\x00")  # trailing bytes
+    with pytest.raises(PuffinError):
         lz4_frame_decompress(b"\x00" * 16)  # bad magic
+    with pytest.raises(PuffinError):
+        lz4_frame_decompress(b"")
 
 
 def test_block_rejects_bad_offsets():
-    with pytest.raises(Lz4Error):
-        lz4_block_decompress(b"\x10A\x05\x00")  # offset beyond output
-    with pytest.raises(Lz4Error):
-        lz4_block_decompress(b"\x10A\x00\x00")  # offset zero
+    with pytest.raises(HFileError):  # offset beyond output
+        hadoop_block_decompress(_framed(5, b"\x10A\x05\x00"), "lz4")
+    with pytest.raises(HFileError):  # offset zero
+        hadoop_block_decompress(_framed(5, b"\x10A\x00\x00"), "lz4")
+    with pytest.raises(HFileError):  # truncated literals
+        hadoop_block_decompress(_framed(9, b"\x90ABC"), "lz4")
 
 
 # ------------------------------------------------------------------- JVM
@@ -120,9 +165,8 @@ def test_jvm_frames_decode_here(spark):
 
 def test_our_frames_decode_in_jvm(spark):
     for data in _corpus():
-        for code in (4, 6):
-            frame = lz4_frame_compress(data, block_max_code=code)
-            assert _jvm_frame_decompress(spark, frame) == data
+        frame = lz4_frame_compress(data)
+        assert _jvm_frame_decompress(spark, frame) == data
 
 
 def test_block_codec_matches_jvm_safe_decompressor(spark):
@@ -133,12 +177,13 @@ def test_block_codec_matches_jvm_safe_decompressor(spark):
     for data in _corpus():
         if not data:
             continue
-        # JVM compress -> python decompress
+        # JVM block -> a Hadoop-framed chunk here
         jcomp = bytes(comp.compress(data))
-        assert lz4_block_decompress(jcomp) == data
-        # python compress -> JVM decompress
-        pcomp = lz4_block_compress(data)
-        assert bytes(dec.decompress(pcomp, len(data))) == data
+        assert hadoop_block_decompress(_framed(len(data), jcomp), "lz4") == data
+        # our chunk -> JVM block decompressor
+        ours = hadoop_block_compress(data, "lz4")
+        assert struct.unpack_from(">ii", ours) == (len(data), len(ours) - 8)
+        assert bytes(dec.decompress(ours[8:], len(data))) == data
 
 
 def test_xxh32_matches_jvm(spark):
@@ -175,8 +220,6 @@ def test_puffin_footer_compressed_by_jvm_lz4(spark):
     """A third-party writer that compresses the footer with the real
     lz4 frame codec (content size present, per the Puffin spec) must
     read here — the exact case the pre-r11 reader refused."""
-    import struct
-
     from easy_sql_spark.sources.puffin import MAGIC, read_puffin_footer
 
     payload = json.dumps(
@@ -198,11 +241,8 @@ def test_puffin_footer_compressed_by_jvm_lz4(spark):
 
 
 def test_puffin_corrupt_compressed_footer_raises():
-    import struct
-
     from easy_sql_spark.sources.puffin import (
         MAGIC,
-        PuffinError,
         read_puffin_footer,
         write_puffin,
     )
@@ -239,39 +279,26 @@ if _HYP:
                 st.binary(max_size=50),
             ),
         ),
-        code=st.sampled_from([4, 5, 6, 7]),
-        checksum=st.booleans(),
     )
-    def test_frame_roundtrip_property(data, code, checksum):
-        frame = lz4_frame_compress(
-            data, block_max_code=code, content_checksum=checksum
-        )
-        assert lz4_frame_decompress(frame) == data
+    def test_frame_roundtrip_property(data):
+        assert lz4_frame_decompress(lz4_frame_compress(data)) == data
 
     @settings(max_examples=100, deadline=None)
     @given(st.binary(max_size=5000))
     def test_block_roundtrip_property(data):
-        assert lz4_block_decompress(lz4_block_compress(data)) == data
+        framed = hadoop_block_compress(data, "lz4")
+        assert hadoop_block_decompress(framed, "lz4") == data
 
 
-def test_truncated_block_checksum_raises_lz4error():
-    """r11 review fix: a frame cut inside a trailing block checksum must
-    raise Lz4Error (not struct.error) so PuffinError wrapping holds."""
-    import struct as _struct
-
-    from easy_sql_spark.sources.lz4_lite import FRAME_MAGIC
-
-    body = b"hello world, hello world"
-    comp = lz4_block_compress(body)
-    flg = (0b01 << 6) | 0x20 | 0x10  # block checksums, no content size
-    header = bytes([flg, 6 << 4])
+def test_truncated_block_checksum_raises_puffinerror():
+    """A frame cut inside a trailing block checksum must raise
+    PuffinError, not struct.error or a pyarrow error."""
+    comp = pa.Codec("lz4_raw").compress(b"hello world, hello world", asbytes=True)
     frame = (
-        _struct.pack("<I", FRAME_MAGIC)
-        + header
-        + bytes([(xxh32(header) >> 8) & 0xFF])
-        + _struct.pack("<I", len(comp))
+        _frame_header(0x70)  # block checksums, no content size
+        + struct.pack("<I", len(comp))
         + comp
-        + _struct.pack("<I", xxh32(comp))[:2]  # TRUNCATED checksum
+        + struct.pack("<I", xxh32(comp))[:2]  # TRUNCATED checksum
     )
-    with pytest.raises(Lz4Error, match="truncated block checksum"):
+    with pytest.raises(PuffinError):
         lz4_frame_decompress(frame)

@@ -116,7 +116,44 @@ def test_puffin_container_roundtrip(tmp_path):
             read_dv_blob_from_file(str(p), meta["offset"], meta["length"])
             == want
         )
-    # compressed-footer refusal
+    # flagged compressed, but the payload is not an lz4 frame
     flagged = data[:-8] + b"\x01\x00\x00\x00" + data[-4:]
     with pytest.raises(PuffinError, match="lz4"):
         read_puffin_footer(flagged)
+
+
+def test_footer_lz4_linked_blocks():
+    """A footer over 64 KB compressed by a stock LZ4 frame writer: linked
+    blocks (matches reach into the previous block) and no content size."""
+    import json
+    import struct
+
+    import pyarrow as pa
+
+    from easy_sql_spark.sources.puffin import MAGIC
+
+    footer = {
+        "blobs": [
+            {
+                "type": "deletion-vector-v1",
+                "offset": 4 + 40 * i,
+                "length": 40,
+                "properties": {"referenced-data-file": "/d/part-%05d.parquet" % i},
+            }
+            for i in range(1500)
+        ],
+        "properties": {},
+    }
+    payload = json.dumps(footer).encode()
+    assert len(payload) > 64 * 1024
+    comp = pa.Codec("lz4").compress(payload, asbytes=True)
+    assert comp[4] & 0x28 == 0  # FLG: linked blocks, no content size
+    data = (
+        MAGIC
+        + MAGIC
+        + comp
+        + struct.pack("<i", len(comp))
+        + b"\x01\x00\x00\x00"
+        + MAGIC
+    )
+    assert read_puffin_footer(data) == footer

@@ -1,21 +1,22 @@
-"""snappy_lite: raw-Snappy block codec + Hadoop block framing, the
-lz4_lite discipline — stdlib round-trips, malformed-input rejection,
-hypothesis fuzz, and BOTH-DIRECTION cross-checks against the real
-implementations inside Spark's JVM (org.xerial.snappy for the raw
-format; Hadoop SnappyCodec / Lz4Codec for the framing HBase writes)."""
+"""Hadoop block framing in hfile_lite over Snappy and LZ4 chunks (the
+bytes HBase writes for SNAPPY / LZ4 HFile blocks): round-trips,
+malformed-input rejection, hypothesis fuzz, and BOTH-DIRECTION
+cross-checks against the real implementations inside Spark's JVM
+(org.xerial.snappy for raw Snappy chunks; Hadoop SnappyCodec / Lz4Codec
+for the framing)."""
 
 import random
+import struct
 
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from easy_sql_spark.sources.snappy_lite import (
-    SnappyError,
+from easy_sql_spark.sources.hfile_lite import (
+    HFileError,
     hadoop_block_compress,
     hadoop_block_decompress,
-    snappy_compress,
-    snappy_decompress,
 )
 
 
@@ -38,43 +39,61 @@ def _corpus():
     ]
 
 
-def test_raw_roundtrip():
-    for data in _corpus():
-        assert snappy_decompress(snappy_compress(data)) == data
+def _framed(orig: int, chunk: bytes) -> bytes:
+    """One Hadoop block of ``orig`` bytes carried by a single chunk."""
+    return struct.pack(">ii", orig, len(chunk)) + chunk
+
+
+def _snappy(data: bytes) -> bytes:
+    return pa.Codec("snappy").compress(data, asbytes=True)
 
 
 def test_hadoop_framing_roundtrip():
-    for data in _corpus():
-        assert hadoop_block_decompress(hadoop_block_compress(data)) == data
-    # multi-block framing: force a small block size
-    big = bytes(random.Random(7).randbytes(300_000))
-    framed = hadoop_block_compress(big, block_size=64 * 1024)
-    assert hadoop_block_decompress(framed) == big
+    for codec in ("snappy", "lz4"):
+        for data in _corpus():
+            framed = hadoop_block_compress(data, codec)
+            assert hadoop_block_decompress(framed, codec) == data
+        # past the 256 KB block size the stream carries several blocks
+        big = bytes(random.Random(7).randbytes(300_000))
+        framed = hadoop_block_compress(big, codec)
+        assert struct.unpack_from(">i", framed)[0] == 256 * 1024
+        assert hadoop_block_decompress(framed, codec) == big
 
 
 def test_raw_rejects_corruption():
-    good = snappy_compress(b"abcdefgh" * 100)
-    with pytest.raises(SnappyError):
-        snappy_decompress(good[:-3])  # truncated
-    with pytest.raises(SnappyError):
+    good = _snappy(b"abcdefgh" * 100)
+    with pytest.raises(HFileError):
+        hadoop_block_decompress(_framed(800, good[:-3]), "snappy")  # truncated
+    with pytest.raises(HFileError):
         # copy before any output: offset outside window
-        snappy_decompress(bytes([8, 0b00000101, 1]))
-    with pytest.raises(SnappyError):
-        snappy_decompress(b"\xff\xff\xff\xff\xff\xff")  # varint runs off
+        hadoop_block_decompress(_framed(8, bytes([8, 0b00000101, 1])), "snappy")
+    with pytest.raises(HFileError):
+        # varint runs off
+        hadoop_block_decompress(_framed(5, b"\xff" * 6), "snappy")
+    # the chunk's varint disagrees with its body (11 bytes of literals)
+    body = _snappy(b"hello world")
+    assert body[0] == 11
+    for claimed in (10, 12):
+        with pytest.raises(HFileError):
+            hadoop_block_decompress(
+                _framed(claimed, bytes([claimed]) + body[1:]), "snappy"
+            )
 
 
 def test_framing_rejects_corruption():
-    framed = hadoop_block_compress(b"hello world" * 50)
-    with pytest.raises(SnappyError):
-        hadoop_block_decompress(framed[:-2])
-    with pytest.raises(SnappyError):
-        hadoop_block_decompress(b"\x00\x00\x00\x05")  # block, no chunks
+    for codec in ("snappy", "lz4"):
+        framed = hadoop_block_compress(b"hello world" * 50, codec)
+        with pytest.raises(HFileError):
+            hadoop_block_decompress(framed[:-2], codec)
+        with pytest.raises(HFileError):
+            hadoop_block_decompress(b"\x00\x00\x00\x05", codec)  # no chunks
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.binary(max_size=4096))
 def test_raw_roundtrip_fuzz(data):
-    assert snappy_decompress(snappy_compress(data)) == data
+    framed = hadoop_block_compress(data, "snappy")
+    assert hadoop_block_decompress(framed, "snappy") == data
 
 
 @settings(max_examples=100, deadline=None)
@@ -86,7 +105,8 @@ def test_raw_roundtrip_fuzz(data):
 )
 def test_raw_roundtrip_fuzz_repetitive(parts):
     data = b"".join(parts)
-    assert snappy_decompress(snappy_compress(data)) == data
+    framed = hadoop_block_compress(data, "snappy")
+    assert hadoop_block_decompress(framed, "snappy") == data
 
 
 # ------------------------------------------------------ JVM cross-checks
@@ -94,28 +114,33 @@ def test_raw_roundtrip_fuzz_repetitive(parts):
 
 def test_raw_matches_xerial_snappy(spark):
     """Both directions vs snappy-java (bundled with Spark): its raw
-    blocks decode here; our raw blocks decode there."""
+    blocks decode here as chunks; our chunks decode there."""
     Snappy = spark.sparkContext._jvm.org.xerial.snappy.Snappy
     for data in _corpus():
         if not data:
             continue  # xerial raw compress of empty is fine but trivial
         theirs = bytes(Snappy.compress(data))
-        assert snappy_decompress(theirs) == data
-        ours = snappy_compress(data)
-        assert bytes(Snappy.uncompress(ours)) == data
+        assert hadoop_block_decompress(_framed(len(data), theirs), "snappy") == data
+        ours = hadoop_block_compress(data, "snappy")
+        assert struct.unpack_from(">ii", ours) == (len(data), len(ours) - 8)
+        assert bytes(Snappy.uncompress(ours[8:])) == data
 
 
-def _hadoop_codec(spark, cls_name):
+def _hadoop_codec(spark, cls_name, conf_values=None):
     jvm = spark.sparkContext._jvm
     conf = jvm.org.apache.hadoop.conf.Configuration()
+    for key, value in (conf_values or {}).items():
+        conf.set(key, value)
     codec = getattr(jvm.org.apache.hadoop.io.compress, cls_name)()
     codec.setConf(conf)
     return jvm, codec
 
 
 def _jvm_codec_compress(jvm, codec, data: bytes) -> bytes:
+    # a fresh compressor, not one CodecPool kept from an earlier codec
+    # configuration
     baos = jvm.java.io.ByteArrayOutputStream()
-    out = codec.createOutputStream(baos)
+    out = codec.createOutputStream(baos, codec.createCompressor())
     out.write(data)
     out.close()
     return bytes(baos.toByteArray())
@@ -135,8 +160,8 @@ def test_framing_matches_hadoop_snappy_codec(spark):
         if not data:
             continue
         theirs = _jvm_codec_compress(jvm, codec, data)
-        assert hadoop_block_decompress(theirs) == data
-        ours = hadoop_block_compress(data)
+        assert hadoop_block_decompress(theirs, "snappy") == data
+        ours = hadoop_block_compress(data, "snappy")
         assert _jvm_codec_decompress(jvm, codec, ours) == data
 
 
@@ -144,37 +169,50 @@ def test_framing_matches_hadoop_snappy_multiblock(spark):
     """Force the JVM codec's internal buffer small so its stream carries
     MULTIPLE framed blocks — the path our single-block-emitting encoder
     never produces but real long streams contain."""
-    jvm = spark.sparkContext._jvm
-    conf = jvm.org.apache.hadoop.conf.Configuration()
-    conf.set("io.compression.codec.snappy.buffersize", "4096")
-    codec = jvm.org.apache.hadoop.io.compress.SnappyCodec()
-    codec.setConf(conf)
+    jvm, codec = _hadoop_codec(
+        spark, "SnappyCodec", {"io.compression.codec.snappy.buffersize": "4096"}
+    )
     data = bytes(random.Random(11).randbytes(50_000)) + b"tail" * 5_000
     theirs = _jvm_codec_compress(jvm, codec, data)
-    assert hadoop_block_decompress(theirs) == data
+    assert hadoop_block_decompress(theirs, "snappy") == data
 
 
 def test_framing_matches_hadoop_lz4_codec(spark):
     """Same framing, lz4 chunks (HBase lz4 HFiles): Hadoop Lz4Codec
-    streams decode here via lz4_lite, and vice versa."""
-    from easy_sql_spark.sources.lz4_lite import (
-        lz4_block_compress,
-        lz4_block_decompress,
-    )
-
+    streams decode here, and vice versa."""
     jvm, codec = _hadoop_codec(spark, "Lz4Codec")
     for data in _corpus():
         if not data:
             continue
         theirs = _jvm_codec_compress(jvm, codec, data)
-        assert (
-            hadoop_block_decompress(
-                theirs, chunk_codec=lz4_block_decompress
-            )
-            == data
-        )
-        ours = hadoop_block_compress(data, chunk_codec=lz4_block_compress)
+        assert hadoop_block_decompress(theirs, "lz4") == data
+        ours = hadoop_block_compress(data, "lz4")
         assert _jvm_codec_decompress(jvm, codec, ours) == data
+
+
+def test_framing_matches_hadoop_lz4_multiblock(spark):
+    """One large write under a small buffer: Lz4Codec emits a single
+    block header followed by many chunks, none of which carries its
+    own length — a decoder that guesses chunk sizes fails here."""
+    jvm, codec = _hadoop_codec(
+        spark, "Lz4Codec", {"io.compression.codec.lz4.buffersize": "4096"}
+    )
+    rng = random.Random(12)
+    data = b"".join(
+        rng.choice([b"alpha", b"beta", b"gamma"]) + rng.randbytes(3)
+        for _ in range(10_000)
+    )[:70_000]
+    theirs = _jvm_codec_compress(jvm, codec, data)
+    # one 70000-byte block header, 18 chunks, then the empty block that
+    # close() appends
+    assert struct.unpack_from(">i", theirs)[0] == len(data)
+    assert theirs[-4:] == bytes(4)
+    chunks, pos = 0, 4
+    while pos < len(theirs) - 4:
+        pos += 4 + struct.unpack_from(">i", theirs, pos)[0]
+        chunks += 1
+    assert pos == len(theirs) - 4 and chunks == 18
+    assert hadoop_block_decompress(theirs, "lz4") == data
 
 
 # ------------------------------------------------- HFile integration
