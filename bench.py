@@ -1,11 +1,17 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR on local Spark.
 
-Prints ONE JSON line:
+Writes the full record to BENCH_FULL.json and prints two JSON lines: the
+full record first, then a compact one (:func:`compact_record`) last:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Execution is forced through the ``noop`` sink — the full plan runs JVM-side
 (scan → shuffle → agg) without driver collect overhead, which is what a
 cluster job would measure.
+
+This module is also the one home of the measurement helpers the tools
+share: :func:`noop`, :func:`pyworker_roundtrip`, :func:`warm_up`,
+:func:`query_fn` (the bench-variant map), :func:`time_runs` and
+:func:`control_timings`.  Steal ticks come from ``perfbench.envinfo``.
 """
 
 from __future__ import annotations
@@ -16,6 +22,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench import envinfo  # noqa: E402
 
 # one family per query class (SURVEY §2E/§2 LLM-ops), so a regression in
 # any class is visible round-over-round; supersets round-1's 20 headliners
@@ -131,18 +139,59 @@ COMPACT_SUBSET = [
 ]
 
 
-def steal_ticks() -> int:
-    """Cumulative hypervisor steal ticks (summed over CPUs) — the host
-    is a VM with documented 0-25% bursty steal; recording the delta
-    around every timed region makes each BENCH artifact carry per-query
-    contamination evidence instead of only the start/end controls
-    (VERDICT r14 #2: "auto-record controls + steal per slot").  Returns
-    0 when /proc/stat is unavailable so the bench runs anywhere."""
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[9])
-    except Exception:
-        return 0
+def noop(df) -> None:
+    """Run ``df``'s whole plan into the ``noop`` sink."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def pyworker_roundtrip(spark) -> None:
+    """The bare 32-task Python/Arrow worker round-trip: warms the worker
+    pool (the one-time interpreter forks cost seconds) and, timed, is the
+    ``ctl_pyworker_fold`` control."""
+    noop(spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long"))
+
+
+def query_fn(name: str):
+    """The registry query ``name``, or its bench-only variant.
+
+    a9_sketch_bench / text_deflate_bench run under their OWN names: a9's
+    registry entry runs the sketch in its EXACT regime for the oracle
+    gate; the bench ALSO times the production accuracy-10000 sketch /
+    per-doc DEFLATE — the 100 TB paths.  Published timings for a registry
+    name always measure the correctness-verified code path (ADVICE r6 #5).
+    """
+    from easy_sql_spark.queries import QUERIES
+    from easy_sql_spark.queries.llm_ops3 import a9_sketch_bench
+    from easy_sql_spark.queries.llm_ops5 import text_deflate_bench
+
+    variants = {
+        "a9_sketch_bench": a9_sketch_bench,
+        "text_deflate_bench": text_deflate_bench,
+    }
+    return variants.get(name) or QUERIES[name]
+
+
+def warm_up(spark, sf_dir, query: str = "a1_pricing_summary") -> None:
+    """One untimed, unrecorded run of ``query`` (JVM/codegen/parquet footer
+    caches), then the worker round-trip so mapInPandas queries measure the
+    operator, not the interpreter forks."""
+    noop(query_fn(query)(spark, sf_dir))
+    pyworker_roundtrip(spark)
+
+
+def time_runs(fn, runs: int) -> list[tuple[float, int]]:
+    """Call ``fn()`` ``runs`` times; ``(wall_s, steal_ticks)`` per call.
+
+    Virtual machines lose CPU to steal in bursts, so the steal delta
+    around every timed call is recorded next to its wall: a contaminated
+    call is visible in the artifact.  Callers take the min wall as "what
+    the plan costs" (run-to-run variance under steal bursts reaches ~3x)."""
+    out = []
+    for _ in range(runs):
+        s0, t0 = envinfo.read_steal(), time.time()
+        fn()
+        out.append((time.time() - t0, envinfo.read_steal() - s0))
+    return out
 
 
 def control_timings(spark, sf_dir) -> dict[str, float]:
@@ -164,30 +213,23 @@ def control_timings(spark, sf_dir) -> dict[str, float]:
     inflated too, the run was load-contaminated and per-query deltas
     are environmental.
     """
-    import time as _t
-
-    timings = {}
-    t0 = _t.time()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    timings["ctl_pyworker_fold"] = round(_t.time() - t0, 3)
-
     from pyspark.sql import functions as F
 
-    t0 = _t.time()
-    (
-        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-        .agg(
-            F.sum("l_extendedprice").alias("s"),
-            F.count(F.lit(1)).alias("n"),
+    def scan_agg():
+        noop(
+            spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).agg(
+                F.sum("l_extendedprice").alias("s"),
+                F.count(F.lit(1)).alias("n"),
+            )
         )
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    timings["ctl_scan_agg"] = round(_t.time() - t0, 3)
-    return timings
+
+    controls = {
+        "ctl_pyworker_fold": lambda: pyworker_roundtrip(spark),
+        "ctl_scan_agg": scan_agg,
+    }
+    return {
+        name: round(time_runs(fn, 1)[0][0], 3) for name, fn in controls.items()
+    }
 
 
 def write_benches(spark, sf_dir):
@@ -262,7 +304,7 @@ def write_benches(spark, sf_dir):
         thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            (
+            noop(
                 spark.table("bench_w.orders_b")
                 .join(
                     spark.table("bench_w.lineitem_b"),
@@ -270,9 +312,6 @@ def write_benches(spark, sf_dir):
                 )
                 .groupBy("o_orderpriority")
                 .agg(F.sum("l_quantity"), F.count(F.lit(1)))
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
             )
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
@@ -352,16 +391,13 @@ def write_benches(spark, sf_dir):
     sk_max = li_z.agg(F.max("l_suppkey")).first()[0]
 
     def zorder_scan_2dim():
-        (
+        noop(
             spark.read.parquet(zpath)
             .where(
                 (F.col("l_partkey") < pk_max * 0.05)
                 & (F.col("l_suppkey") < sk_max * 0.05)
             )
             .agg(F.sum("l_extendedprice"))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
         )
 
     # snapshot table (r4): manifest-committed dynamic-partition overwrite
@@ -379,13 +415,10 @@ def write_benches(spark, sf_dir):
 
     def write_snapshot_commit():
         snap.overwrite_partitions(month_snap)
-        (
+        noop(
             snap.read(version=max(1, snap.latest_version() - 1))
             .groupBy("o_orderpriority")
             .agg(F.count(F.lit(1)))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
         )
 
     # snapshot MERGE (r5): keyed upsert of one month's rows into a
@@ -401,13 +434,8 @@ def write_benches(spark, sf_dir):
 
     def write_snapshot_merge():
         snap_m.merge(merge_batch, keys=["o_orderkey"])
-        (
-            snap_m.read()
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
+        noop(
+            snap_m.read().groupBy("o_orderpriority").agg(F.count(F.lit(1)))
         )
 
     return {
@@ -423,10 +451,27 @@ def write_benches(spark, sf_dir):
     }
 
 
+def compact_record(full: dict) -> dict:
+    """The record bench.py prints LAST.  The harness that records this run
+    keeps only the last ~2,000 chars of stdout, and the full per-query
+    dict is ~4k chars, so this line carries the total, the families, the
+    perf-tracked :data:`COMPACT_SUBSET` queries and the environment
+    evidence, and points at BENCH_FULL.json for the rest."""
+    keep = ("metric", "value", "unit")
+    tail = ("families", "sf", "runs", "controls", "loadavg", "steal_ticks_total")
+    return {
+        **{k: full[k] for k in keep},
+        "queries": {
+            k: full["queries"][k] for k in COMPACT_SUBSET if k in full["queries"]
+        },
+        **{k: full[k] for k in tail},
+        "full": "BENCH_FULL.json",
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    from easy_sql_spark.queries import QUERIES
     from easy_sql_spark.session import build_session
 
     spark = build_session(
@@ -442,65 +487,35 @@ def main() -> None:
     # minimum permanently (BENCH_r10/r12 lesson)
     runs = int(os.environ.get("BENCH_RUNS", "3"))
 
-    # bench-only variants run under their OWN names (a9's registry entry
-    # runs the sketch in its EXACT regime for the oracle gate; the bench
-    # ALSO times the production accuracy-10000 sketch / per-doc DEFLATE —
-    # the 100 TB paths).  Published timings for a registry name always
-    # measure the correctness-verified code path (ADVICE r6 #5).
-    from easy_sql_spark.queries.llm_ops3 import a9_sketch_bench
-    from easy_sql_spark.queries.llm_ops5 import text_deflate_bench
+    warm_up(spark, sf_dir)
 
-    bench_variants = {
-        "a9_sketch_bench": a9_sketch_bench,
-        "text_deflate_bench": text_deflate_bench,
-    }
+    # environment evidence (after warmup so controls measure load, not
+    # cold caches); repeated at the END so load arriving mid-run shows
+    loadavg_start = list(os.getloadavg())
+    steal_bench_start = envinfo.read_steal()
+    controls_start = control_timings(spark, sf_dir)
 
     #: per-query steal-tick deltas (one entry per run, same order the
     #: runs executed) — contamination evidence alongside each timing;
     #: written to BENCH_FULL.json (the compact stdout line carries only
     #: the whole-bench total, to stay inside its size budget)
     steal_q: dict[str, list[int]] = {}
-
-    def run(name: str) -> float:
-        fn = bench_variants.get(name) or QUERIES[name]
-        best = float("inf")
-        for _ in range(runs):
-            s0, t0 = steal_ticks(), time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-            steal_q.setdefault(name, []).append(steal_ticks() - s0)
-        return best
-
-    run("a1_pricing_summary")  # warmup: JVM/codegen/parquet footer caches
-    # warm the Python/Arrow worker pool so mapInPandas queries measure the
-    # operator, not the one-time interpreter forks (32 workers ≈ seconds)
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # environment evidence (after warmup so controls measure load, not
-    # cold caches); repeated at the END so load arriving mid-run shows
-    loadavg_start = list(os.getloadavg())
-    steal_bench_start = steal_ticks()
-    controls_start = control_timings(spark, sf_dir)
-
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        timings[name] = round(run(name), 3)
 
+    def measure(name: str, fn) -> None:
+        samples = time_runs(fn, runs)
+        timings[name] = round(min(w for w, _ in samples), 3)
+        steal_q[name] = [st for _, st in samples]
+
+    for name in HEADLINE:
+        fn = query_fn(name)
+        measure(name, lambda: noop(fn(spark, sf_dir)))
     writes = write_benches(spark, sf_dir)
-    for name, fn in writes.items():
-        best = float("inf")
-        for _ in range(runs):  # both writes are idempotent re-runs
-            s0, t0 = steal_ticks(), time.time()
-            fn()
-            best = min(best, time.time() - t0)
-            steal_q.setdefault(name, []).append(steal_ticks() - s0)
-        timings[name] = round(best, 3)
+    for name, fn in writes.items():  # every write is an idempotent re-run
+        measure(name, fn)
 
     controls_end = control_timings(spark, sf_dir)
-    steal_total = steal_ticks() - steal_bench_start
+    steal_total = envinfo.read_steal() - steal_bench_start
     loadavg_end = list(os.getloadavg())
     controls = {"start": controls_start, "end": controls_end}
     loadavg = {
@@ -532,31 +547,15 @@ def main() -> None:
         "steal_ticks_total": steal_total,
         "steal_ticks_per_query": steal_q,
     }
-    # The harness that records this run keeps only the LAST ~2,000 chars
-    # of stdout, and the full per-query dict is ~4k chars — so the full
-    # record goes to a file + the FIRST stdout line, and stdout ENDS with
-    # a compact line (total + families + the perf-tracked headline
-    # queries) that is guaranteed to fit the tail window intact.
+    # the full record goes to a file + the FIRST stdout line; stdout ENDS
+    # with the compact line, which is guaranteed to fit the tail window
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"),
         "w",
     ) as f:
         json.dump(full, f, indent=1)
     print(json.dumps(full), flush=True)
-    compact = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": {k: timings[k] for k in COMPACT_SUBSET if k in timings},
-        "families": families,
-        "sf": sf_val,
-        "runs": runs,
-        "controls": controls,
-        "loadavg": loadavg,
-        "steal_ticks_total": steal_total,
-        "full": "BENCH_FULL.json",
-    }
-    line = json.dumps(compact)
+    line = json.dumps(compact_record(full))
     assert len(line) <= 1900, f"compact bench line too long: {len(line)}"
     print(line, flush=True)
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..datasets import file_sizes
+
 
 def _bucket_tree(x: F.Column, boundaries: list[float], offset: int) -> F.Column:
     """Balanced CASE-WHEN binary search over sorted boundary literals —
@@ -91,14 +93,11 @@ def _probe_fraction(df: DataFrame) -> float:
         files = df.inputFiles()
         if not files:
             return 1.0
-        spark = df.sparkSession
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
         total = 0
-        for f in files:
-            path = jvm.org.apache.hadoop.fs.Path(f)
-            fs = path.getFileSystem(hconf)
-            total += fs.getFileStatus(path).getLen()
+        for _, size in file_sizes(df.sparkSession, files):
+            total += size
+            if total >= 100 * target:  # past the 1% floor; stop stat-ing
+                break
     except Exception:  # pragma: no cover - exotic sources; just don't sample
         return 1.0
     if total <= target:

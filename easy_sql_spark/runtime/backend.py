@@ -25,6 +25,8 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..datasets import file_sizes
+
 
 @dataclass
 class Partition:
@@ -754,15 +756,10 @@ class SparkBackend:
     def table_file_stats(self, table_name: str) -> dict[str, dict]:
         """File count + bytes per partition spec ('' for unpartitioned),
         from scan metadata + driver-side FS stats — no job runs."""
-        df = self.spark.table(table_name)
-        sc = self.spark.sparkContext
-        jvm = sc._jvm
-        hconf = sc._jsc.hadoopConfiguration()
+        files = self.spark.table(table_name).inputFiles()
         stats: dict[str, dict] = {}
-        for f in df.inputFiles():
+        for f, size in file_sizes(self.spark, files):
             spec = "/".join(seg for seg in f.split("/")[:-1] if "=" in seg)
-            path = jvm.org.apache.hadoop.fs.Path(f)
-            size = path.getFileSystem(hconf).getFileStatus(path).getLen()
             s = stats.setdefault(spec, {"files": 0, "bytes": 0})
             s["files"] += 1
             s["bytes"] += size

@@ -334,7 +334,7 @@ def test_probe_sampling_gate_and_layout(spark, tmp_path, monkeypatch):
     # non-file source: no leaf files -> never sampled
     assert _probe_fraction(df) == 1.0
 
-    # parquet-backed frame under the default 8 MB target: not sampled
+    # parquet-backed frame under the default 2 MiB target: not sampled
     src = str(tmp_path / "src")
     df.write.parquet(src)
     pdf = spark.read.parquet(src)
@@ -371,3 +371,45 @@ def test_probe_sampling_gate_and_layout(spark, tmp_path, monkeypatch):
 
     with _pytest.raises(ValueError, match="EASY_SQL_ZPROBE_SAMPLE_BYTES"):
         _probe_fraction(pdf)
+
+
+def _stub_frame(sizes):
+    """A frame-shaped stub over ``len(sizes)`` files whose driver-side
+    FS stats come from ``sizes``; ``fs.calls`` counts getFileStatus."""
+    from types import SimpleNamespace as NS
+
+    fs = NS(calls=0)
+
+    def get_file_status(path):
+        fs.calls += 1
+        return NS(getLen=lambda: sizes[path.name])
+
+    fs.getFileStatus = get_file_status
+
+    def make_path(name):
+        return NS(name=name, getFileSystem=lambda hconf: fs)
+
+    jvm = NS(org=NS(apache=NS(hadoop=NS(fs=NS(Path=make_path)))))
+    sc = NS(_jvm=jvm, _jsc=NS(hadoopConfiguration=lambda: None))
+    files = [f"part-{i:05d}.parquet" for i in range(len(sizes))]
+    sizes = dict(zip(files, sizes))
+    return NS(inputFiles=lambda: files, sparkSession=NS(sparkContext=sc)), fs
+
+
+def test_probe_fraction_stops_stat_ing_at_the_floor(monkeypatch):
+    """10^4 files of 1 MiB against the 2 MiB target: the 1% floor is
+    decided once 200 MiB is seen, so the probe stats 200 files, not all
+    10^4; below the floor every file is still counted."""
+    from easy_sql_spark.operators.zorder import (
+        ZPROBE_SAMPLE_TARGET_BYTES,
+        _probe_fraction,
+    )
+
+    monkeypatch.delenv("EASY_SQL_ZPROBE_SAMPLE_BYTES", raising=False)
+    df, fs = _stub_frame([1 << 20] * 10_000)
+    assert _probe_fraction(df) == 0.01
+    assert fs.calls == 200
+
+    df, fs = _stub_frame([100_000] * 50)  # 5 MB: fraction above the floor
+    assert _probe_fraction(df) == ZPROBE_SAMPLE_TARGET_BYTES / 5_000_000
+    assert fs.calls == 50

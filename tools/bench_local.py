@@ -25,13 +25,16 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import (  # noqa: E402  (driver workload)
     HEADLINE,
     control_timings,
+    noop,
+    query_fn,
+    time_runs,
+    warm_up,
     write_benches,
 )
 
@@ -41,32 +44,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
-    from easy_sql_spark.queries import QUERIES
-    from easy_sql_spark.queries.llm_ops3 import a9_sketch_bench
-    from easy_sql_spark.queries.llm_ops5 import text_deflate_bench
     from easy_sql_spark.session import build_session
 
-    # EXACTLY bench.py's mapping: variants run under their OWN names
-    # (ADVICE r6 #5 — registry names always time the oracle-verified
-    # path); anything else resolves from the registry
-    bench_variants = {
-        "a9_sketch_bench": a9_sketch_bench,
-        "text_deflate_bench": text_deflate_bench,
-    }
-
     spark = build_session("bench_local", extra_conf={"spark.ui.enabled": "false"})
+    warm_up(spark, sf_dir)  # identical to bench.py
 
-    def time_df(fn) -> float:
-        t0 = time.time()
-        fn()
-        return time.time() - t0
-
-    # identical warmup to bench.py
-    q0 = QUERIES["a1_pricing_summary"]
-    q0(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    def walls(fn) -> list[float]:
+        return [w for w, _ in time_runs(fn, n)]
 
     samples: dict[str, list[float]] = {}
     # the two bench.py controls FIRST: their bands are what makes a
@@ -77,20 +61,12 @@ def main() -> None:
         for cname, secs in control_timings(spark, sf_dir).items():
             ctl_samples.setdefault(cname, []).append(secs)
     for name in HEADLINE:
-        fn = bench_variants.get(name) or QUERIES[name]
-        samples[name] = [
-            time_df(
-                lambda: fn(spark, sf_dir)
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
-            )
-            for _ in range(n)
-        ]
+        fn = query_fn(name)
+        samples[name] = walls(lambda: noop(fn(spark, sf_dir)))
         print(f"{name}: {min(samples[name]):.2f}s", file=sys.stderr, flush=True)
 
     for name, wfn in write_benches(spark, sf_dir).items():
-        samples[name] = [time_df(wfn) for _ in range(n)]
+        samples[name] = walls(wfn)
         print(f"{name}: {min(samples[name]):.2f}s", file=sys.stderr, flush=True)
 
     spark.stop()

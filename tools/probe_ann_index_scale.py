@@ -45,6 +45,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import noop, time_runs  # noqa: E402
+
 QUERIES_N = 100
 NPROBE = 4
 RUNS = 3
@@ -98,12 +100,10 @@ def main() -> None:
             idx.create(vecs, k=k, iters=2)
             build_s = time.time() - t0
 
-            search_s = []
-            for _ in range(RUNS):
-                t0 = time.time()
-                idx.search(queries, topk=10, nprobe=NPROBE, arrow=True) \
-                    .write.format("noop").mode("overwrite").save()
-                search_s.append(time.time() - t0)
+            search_s = [w for w, _ in time_runs(
+                lambda: noop(idx.search(queries, topk=10, nprobe=NPROBE, arrow=True)),
+                RUNS,
+            )]
             t0 = time.time()
             idx.ingest(batch, batch_id=2)
             ingest_s = time.time() - t0
@@ -120,10 +120,10 @@ def main() -> None:
         # SemDeDup production path: K ∝ n (paper sizing), arrow/BLAS
         sd_k = max(8, n // 500)
         t0 = time.time()
-        semantic_dedup(
+        noop(semantic_dedup(
             vecs, k=sd_k, iters=2, tau=0.99,
             id_col="vec_id", vec_col="v", arrow=True,
-        ).write.format("noop").mode("overwrite").save()
+        ))
         print(json.dumps({
             "probe": "semantic_dedup_production",
             "sf_dir": sf_dir, "n_vectors": n, "k": sd_k,

@@ -2,8 +2,7 @@
 
 The query is a full index lifecycle; the bench times the whole thing.
 This probe times each phase separately, min-of-N in one session, with
-/proc/stat steal ticks per phase so a contaminated repetition is
-visible.  Phases:
+steal ticks per phase so a contaminated repetition is visible.  Phases:
 
   create        lloyd training (seeds + 2 iterations) + partitioned
                 snapshot create
@@ -25,18 +24,10 @@ Usage: python tools/probe_ann_phases.py [RUNS]
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def steal() -> int:
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[9])
-
-
-def noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+from bench import noop, time_runs, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -55,21 +46,12 @@ def main() -> None:
     from easy_sql_spark.session import build_session
 
     spark = build_session("ann_phases", extra_conf={"spark.ui.enabled": "false"})
-    # warm JVM + python workers like bench.py does
-    noop(QUERIES["sim_ann_index_search"](spark, sf_dir))
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir, "sim_ann_index_search")
 
-    best: dict[str, float] = {}
-    ticks: dict[str, list[int]] = {}
+    samples: dict[str, list[tuple[float, int]]] = {}
 
-    def timed(name, fn):
-        s0, t0 = steal(), time.time()
-        fn()
-        dt, ds = time.time() - t0, steal() - s0
-        best[name] = min(best.get(name, float("inf")), dt)
-        ticks.setdefault(name, []).append(ds)
+    def record(name, fn):
+        samples.setdefault(name, []).extend(time_runs(fn, 1))
 
     for _ in range(runs):
         emb = (
@@ -90,8 +72,8 @@ def main() -> None:
             )
 
         idx = IVFIndex(spark, tempfile.mkdtemp(prefix="annphase_"))
-        timed("create", lambda: idx.create(vecs(0, 400), k=ANNIDX_K, iters=2))
-        timed("ingest", lambda: idx.ingest(vecs(400, 500), batch_id=0))
+        record("create", lambda: idx.create(vecs(0, 400), k=ANNIDX_K, iters=2))
+        record("ingest", lambda: idx.ingest(vecs(400, 500), batch_id=0))
 
         queries = vecs(0, 5).select(
             F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
@@ -123,28 +105,31 @@ def main() -> None:
             .select("query_id", "qv", norm("qv").alias("qnrm"), "cell")
         )
         rows_box = {}
-        timed("probe_collect", lambda: rows_box.setdefault("r", probe_df.collect()))
+        record("probe_collect", lambda: rows_box.setdefault("r", probe_df.collect()))
         rows = rows_box["r"]
-        timed(
+        record(
             "probe_eval",
             lambda: noop(
                 idx._probe_frame(rows, queries.schema["qv"].dataType)
             ),
         )
-        timed(
+        record(
             "search_rank",
             lambda: noop(
                 idx.search(queries, topk=ANNIDX_TOPK, nprobe=ANNIDX_NPROBE)
             ),
         )
-        timed(
+        record(
             "full_query",
             lambda: noop(QUERIES["sim_ann_index_search"](spark, sf_dir)),
         )
 
     print(f"\nphase best-of-{runs} (s) | steal ticks per rep")
-    for name, v in best.items():
-        print(f"  {name:14s} {v:7.3f}   {ticks[name]}")
+    for name, reps in samples.items():
+        print(
+            f"  {name:14s} {min(w for w, _ in reps):7.3f}"
+            f"   {[st for _, st in reps]}"
+        )
     spark.stop()
 
 

@@ -18,9 +18,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import noop, pyworker_roundtrip, time_runs  # noqa: E402
 
 
 def main():
@@ -40,14 +41,7 @@ def main():
     spark = build_session("probe_assign", extra_conf={"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warmup both engines (JIT + Python worker pool)
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    def steal():
-        with open("/proc/stat") as fh:
-            return int(fh.readline().split()[8])
+    pyworker_roundtrip(spark)  # warm the Python worker pool
 
     print(
         f"{'n':>8} {'k':>4} {'fold_min':>9} {'kernel_min':>10} "
@@ -68,20 +62,18 @@ def main():
         )
         for k in ks:
             cents = [r["v"] for r in base.limit(k).collect()]
-            s0 = steal()
-            f_best = kern_best = float("inf")
-            for _ in range(runs):
-                t0 = time.time()
-                _assign_fold(base, cents, "v", "cluster").write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                f_best = min(f_best, time.time() - t0)
-                t0 = time.time()
-                _assign_fold_kernel(base, cents, "v", "cluster").write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                kern_best = min(kern_best, time.time() - t0)
-            s1 = steal()
+            fold, kern = [], []
+            for _ in range(runs):  # interleaved A/B/A/B
+                fold += time_runs(
+                    lambda: noop(_assign_fold(base, cents, "v", "cluster")), 1
+                )
+                kern += time_runs(
+                    lambda: noop(_assign_fold_kernel(base, cents, "v", "cluster")),
+                    1,
+                )
+            f_best = min(w for w, _ in fold)
+            kern_best = min(w for w, _ in kern)
+            steal_dt = sum(st for _, st in fold + kern)
             mism = (
                 _assign_fold(base, cents, "v", "cluster")
                 .select("vec_id", F.col("cluster").alias("a"))
@@ -96,7 +88,7 @@ def main():
             )
             print(
                 f"{n:>8} {k:>4} {f_best:>9.3f} {kern_best:>10.3f} "
-                f"{kern_best / f_best:>6.2f} {mism:>6} {s1 - s0:>8}"
+                f"{kern_best / f_best:>6.2f} {mism:>6} {steal_dt:>8}"
             )
         # ADVICE r14: unpersist() does not free localCheckpoint RDD
         # blocks (released only when the RDD is GC'd) — drop the frame

@@ -24,18 +24,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def steal() -> int:
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[9])
-
-
-def noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+from bench import noop, pyworker_roundtrip, time_runs, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -46,12 +38,7 @@ def main() -> None:
     from easy_sql_spark.session import build_session
 
     spark = build_session("mm_phases", extra_conf={"spark.ui.enabled": "false"})
-    QUERIES["mm_decode_stats"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir, "mm_decode_stats")
 
     # one decode query per codec body (all share the scan->spread->
     # mapInPandas->agg shape; the decode BODY differs)
@@ -65,45 +52,35 @@ def main() -> None:
         "mm_mp3_demux_stats",       # MPEG frame demux
     ]
 
-    best: dict[tuple[str, str], float] = {}
-    ticks: dict[tuple[str, str], list[int]] = {}
+    samples: dict[tuple[str, str], list[tuple[float, int]]] = {}
 
-    def timed(codec: str, phase: str, fn) -> None:
-        s0, t0 = steal(), time.time()
-        fn()
-        dt, ds = time.time() - t0, steal() - s0
-        key = (codec, phase)
-        best[key] = min(best.get(key, float("inf")), dt)
-        ticks.setdefault(key, []).append(ds)
-
-    def control() -> None:
-        spark.range(64).repartition(32).mapInPandas(
-            lambda it: it, "id long"
-        ).write.format("noop").mode("overwrite").save()
+    def record(codec: str, phase: str, fn) -> None:
+        samples.setdefault((codec, phase), []).extend(time_runs(fn, 1))
 
     for _ in range(runs):
         for name in CODECS:
-            timed(name, "control", control)
+            record(name, "control", lambda: pyworker_roundtrip(spark))
             fn = QUERIES[name]
-            timed(name, "full", lambda fn=fn: noop(fn(spark, sf_dir)))
+            record(name, "full", lambda fn=fn: noop(fn(spark, sf_dir)))
         # per-codec decode-only phases (explicit, mirrors the call sites)
-        from pyspark.sql import functions as F
-
-        from easy_sql_spark.datasets import load_table, spread
+        from easy_sql_spark.datasets import spread
         from easy_sql_spark.operators.multimodal import decode_media
         from easy_sql_spark.queries.multimodal import _media_df
 
         media = _media_df(spark, sf_dir).select("media_id", "kind", "payload")
-        timed("mm_decode_stats", "scan_only", lambda: noop(spread(media)))
-        timed(
+        record("mm_decode_stats", "scan_only", lambda: noop(spread(media)))
+        record(
             "mm_decode_stats",
             "decode",
             lambda: noop(decode_media(spread(media), mode="fake")),
         )
 
     print(f"\nper-codec best-of-{runs} (s) | steal ticks per rep")
-    for (codec, phase), v in sorted(best.items()):
-        print(f"  {codec:26s} {phase:9s} {v:7.3f}   {ticks[(codec, phase)]}")
+    for (codec, phase), reps in sorted(samples.items()):
+        print(
+            f"  {codec:26s} {phase:9s} {min(w for w, _ in reps):7.3f}"
+            f"   {[st for _, st in reps]}"
+        )
     spark.stop()
 
 

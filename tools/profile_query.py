@@ -1,72 +1,58 @@
 """Per-query job-count + wall profiler (guide §1: measure first).
 
-For each named query: run it through the noop sink under a dedicated
-job group and report wall seconds plus the number of Spark JOBS the
-lifecycle launched (the scheduler constant that dominates sub-second
-queries at sf0.1 — each job is a driver->scheduler round-trip).
+For each named query: run it through the noop sink inside a
+``perfbench.spans.Tracer`` span and report wall seconds plus the number
+of Spark JOBS the lifecycle launched (the scheduler constant that
+dominates sub-second queries at sf0.1 — each job is a driver->scheduler
+round-trip).  Jobs, stages and tasks are counted exactly as perfbench's
+``exec.jobs/stages/tasks``: stages and tasks that ran (skipped stages
+are not counted).
 
     python tools/profile_query.py <sf_dir> <query> [query ...]
 
 Repeats each query ``PROFILE_RUNS`` times (default 3) and reports the
-minimum wall (the bench's estimator) with the job count of the last run.
+minimum wall (the bench's estimator) with the counts of that run.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import noop, query_fn, warm_up  # noqa: E402
+from perfbench.spans import Tracer  # noqa: E402
 
 
 def main():
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
     runs = int(os.environ.get("PROFILE_RUNS", "3"))
-    from easy_sql_spark.queries import QUERIES
     from easy_sql_spark.session import build_session
 
     spark = build_session("profile", extra_conf={"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
-    # warmup (same as bench.py)
-    QUERIES["a1_pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
+    tracer = Tracer(spark)
+    tracer.collect([])  # skip the warm-up's jobs
 
     print(f"{'query':<28} {'min_wall':>8} {'jobs':>5} {'stages':>6} {'tasks':>6}")
     for name in names:
-        fn = QUERIES[name]
-        best, n_jobs, n_stages, n_tasks = float("inf"), 0, 0, 0
-        for i in range(runs):
-            group = f"prof_{name}_{i}"
-            sc.setJobGroup(group, name)
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            sc.setJobGroup(None, None)
-            tracker = sc.statusTracker()
-            jids = tracker.getJobIdsForGroup(group)
-            if dt < best:
-                best = dt
-                n_jobs = len(jids)
-                n_stages = n_tasks = 0
-                for j in jids:
-                    ji = tracker.getJobInfo(j)
-                    if ji is None:
-                        continue
-                    n_stages += len(ji.stageIds)
-                    for s in ji.stageIds:
-                        si = tracker.getStageInfo(s)
-                        if si is not None:
-                            n_tasks += si.numTasks
-        print(f"{name:<28} {best:8.3f} {n_jobs:>5} {n_stages:>6} {n_tasks:>6}")
+        fn = query_fn(name)
+        best = None
+        for _ in range(runs):
+            with tracer.span(name) as rec:
+                noop(fn(spark, sf_dir))
+            jobs = [j for j in tracer.collect([rec]) if j["job_id"] in rec["jobs"]]
+            row = (
+                rec["end"] - rec["start"],
+                len(jobs),
+                sum(j["stages"] for j in jobs),
+                sum(j["tasks"] for j in jobs),
+            )
+            best = min(best or row, row)
+        print(f"{name:<28} {best[0]:8.3f} {best[1]:>5} {best[2]:>6} {best[3]:>6}")
     spark.stop()
 
 

@@ -27,9 +27,10 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import noop, time_runs, warm_up, write_benches  # noqa: E402
 
 SF_DIRS = [
     ("0.01", "/root/testdata/sf0.01"),
@@ -55,21 +56,11 @@ WRITE_REPS = ["write_zorder", "write_upsert_merge"]
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
-    from bench import write_benches
     from easy_sql_spark.queries import QUERIES
     from easy_sql_spark.session import build_session
 
     spark = build_session("scale_curve", extra_conf={"spark.ui.enabled": "false"})
-
-    def timed(fn) -> float:
-        t0 = time.time()
-        fn()
-        return time.time() - t0
-
-    # warmup
-    QUERIES["a1_pricing_summary"](spark, SF_DIRS[0][1]).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark, SF_DIRS[0][1])
 
     rows = []
     for fam, names in {**REPS, "write": WRITE_REPS}.items():
@@ -83,19 +74,11 @@ def main() -> None:
                           "tools/make_scaled_fixture.py", file=sys.stderr)
                     return
                 if fam == "write":
-                    thunks = write_benches(spark, d)
-                    runs = [timed(thunks[name]) for _ in range(n)]
+                    fn = write_benches(spark, d)[name]
                 else:
                     q = QUERIES[name]
-                    runs = [
-                        timed(
-                            lambda: q(spark, d)
-                            .write.format("noop")
-                            .mode("overwrite")
-                            .save()
-                        )
-                        for _ in range(n)
-                    ]
+                    fn = lambda: noop(q(spark, d))  # noqa: E731
+                runs = [w for w, _ in time_runs(fn, n)]
                 medians[sf] = round(statistics.median(runs), 3)
             import math
 
