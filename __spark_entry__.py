@@ -32,67 +32,40 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["a1_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
-#: Round-15 driver-window front: stalest-driver-verdict entries first.
-#: No registry entry's EXECUTION PATH changed in r15 (the round's
-#: engine work was measurement/protocol + test-gate tiering — see
-#: OPTIMIZATION_r15.md), so the whole 50-slot window goes to vintage
-#: retirement: the three r10-vintage entries deferred from the r14
-#: window (text_quality, text_stats_by_lang, text_token_count — the
-#: r14 front-list promise), then all 41 remaining r11-vintage entries,
-#: then the six alphabetically first r12-vintage entries.  After this
-#: window no entry's last driver verdict predates r12.  Vintages
-#: computed from the union of CORRECTNESS_r01..r14 (r10×3, r11×41,
-#: r12×40, r13×42, r14×50).  The driver samples the first 50
-#: ``queries()`` entries.
-_ROUND15_FRONT = (
-    # r10 vintage (the r14 deferral — MUST front this round):
-    "text_quality", "text_stats_by_lang", "text_token_count",
-    # r11 vintage, all 41, alphabetical:
-    "a4_approx_distinct", "a9_approx_quantiles", "data_shard_split",
-    "events_daily_anomaly", "events_retention_cohorts",
-    "f12_higher_order", "hudi_metadata_table_read",
-    "iceberg_partition_evolution_read", "interval_overlap_join",
-    "j9_lateral_topk", "mm_gif_frames_stats", "mm_mp3_demux_stats",
-    "mm_mp3_id3_tags", "mm_wav_dominant_freq", "q11_important_stock",
-    "q12_shipping_lag", "q15_top_supplier", "q16_supplier_part_cnt",
-    "q17_small_qty_revenue", "q19_discounted_revenue",
-    "q20_part_promotion", "q21_waiting_suppliers",
-    "q22_global_sales_opportunity", "q2_min_cost_supplier",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "s13_recursive_cte", "s6b_setops_all",
-    "scd2_point_in_time_join", "seq_pack_bins", "sim_quantize_int8",
-    "snapshot_change_feed", "snapshot_time_travel",
-    "text_gopher_filter", "text_pii_redact", "text_repetition_filter",
-    "text_unicode_nfc", "text_warc_roundtrip", "text_weighted_sample",
-    # r12 vintage, the six alphabetically first (fill to 50):
-    "a10_kmv_distinct", "a1_pricing_summary", "a2_global_agg",
-    "a3_distinct_agg", "a5_cube", "a5_grouping_sets",
-)
+def _driver_order(names, here: str = _HERE) -> list[str]:
+    """``names`` in driver-window order: by the last round whose
+    ``CORRECTNESS_r<N>.json`` (beside this file) holds a verdict for the
+    entry, stalest first (no verdict at all counts as round 0), then by
+    name.  A name in those files that ``names`` lacks RAISES — a typo'd
+    or renamed entry must not silently skip its re-adjudication
+    (VERDICT r8 "what's wrong" #3)."""
+    import json
+    import re
+
+    last: dict[str, int] = {}
+    for fname in os.listdir(here):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m:
+            with open(os.path.join(here, fname)) as f:
+                for k in json.load(f):
+                    last[k] = max(last.get(k, 0), int(m.group(1)))
+    unknown = sorted(set(last) - set(names))
+    if unknown:
+        raise KeyError(
+            f"CORRECTNESS_r*.json names not in the query registry: {unknown}"
+        )
+    return sorted(names, key=lambda k: (last.get(k, 0), k))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    The driver's correctness gate samples the FIRST 50 entries.  Round-15
-    rotation: stalest-driver-verdict entries first
-    (``_ROUND15_FRONT``), then everything else newest-first.  An unknown
-    front name RAISES — a typo'd or renamed entry must not silently skip
-    its re-adjudication (VERDICT r8 "what's wrong" #3).
+    The driver's correctness gate samples the FIRST 50 entries, so the
+    order puts the stalest driver verdicts first (``_driver_order``).
     tests/test_oracle_all.py stays authoritative over ALL entries."""
     from easy_sql_spark.queries import QUERIES
 
-    unknown = [k for k in _ROUND15_FRONT if k not in QUERIES]
-    if unknown:
-        raise KeyError(
-            f"_ROUND15_FRONT names not in the query registry: {unknown}"
-        )
-    front = {k: QUERIES[k] for k in _ROUND15_FRONT}
-    rest = {
-        k: v
-        for k, v in reversed(list(QUERIES.items()))
-        if k not in front
-    }
-    return {**front, **rest}
+    return {k: QUERIES[k] for k in _driver_order(QUERIES)}
 
 
 def oracle_sql() -> dict[str, str]:

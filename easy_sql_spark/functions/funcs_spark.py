@@ -809,13 +809,9 @@ def build(processor):
         row counts, no data scanned — `func.snapshot_row_count(/w/t,
         dt=2024-01-01|dt=2024-01-02)` (partitions optional, values
         |-separated as col=value)."""
-        parts: dict[str, list] = {}
-        for spec in (s for s in partitions.split("|") if s):
-            c, v = spec.split("=", 1)
-            parts.setdefault(c, []).append(v)
         n = _snapshot(root).row_count(
             version=int(version) if version else None,
-            partitions=parts or None,
+            partitions=_part_spec(partitions),
         )
         processor.log(f"snapshot_row_count({root}): {n}")
         return n

@@ -20,12 +20,12 @@ from __future__ import annotations
 
 import uuid
 from dataclasses import dataclass, field
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..datasets import file_sizes
+from ..hive_path import partition_values
 
 
 @dataclass
@@ -823,19 +823,17 @@ class SparkBackend:
                 "files_before": sum(s["files"] for s in stats.values()),
                 "files_after": sum(s["files"] for s in stats.values()),
             }
-        # decode partition values from the path specs into a broadcast frame
-        rows = []
-        for spec in fragmented:
-            vals = {}
-            for seg in spec.split("/"):
-                k, _, v = seg.partition("=")
-                vals[k] = unquote(v)
-            rows.append(tuple(vals.get(c) for c in part_cols))
+        # decode partition values from the path specs into a broadcast
+        # frame; eqNullSafe lets a NULL partition match its own rows
+        rows = [
+            tuple(partition_values(spec, part_cols).values())
+            for spec in fragmented
+        ]
         from ..datasets import arrow_frame, inline_frame
 
         mk = inline_frame if len(rows) <= 256 else arrow_frame
         sel = mk(spark, rows, ", ".join(f"{c} string" for c in part_cols))
-        cond = [df[c].cast("string") == sel[c] for c in part_cols]
+        cond = [df[c].cast("string").eqNullSafe(sel[c]) for c in part_cols]
         scoped = (
             df.alias("t")
             .join(F.broadcast(sel), cond, "left_semi")

@@ -52,7 +52,9 @@ import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructType
+
+from ..hive_path import partition_values, typed_value
 
 _MANIFEST_FMT = "v%08d.json"
 _RETRIES = 5
@@ -362,7 +364,6 @@ class SnapshotTable:
         import datetime as _dt
         import decimal as _dec
         import math as _math
-        from urllib.parse import unquote as _unquote
 
         import pyarrow.parquet as _pq
 
@@ -377,29 +378,11 @@ class SnapshotTable:
             types = {f.name: f.dataType for f in sch.fields}
 
         def part_value(d: str, col: str):
-            for seg in d.split("/")[1:]:
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    if k == col:
-                        if v == "__HIVE_DEFAULT_PARTITION__":
-                            return None
-                        v = _unquote(v)
-                        t = types.get(col)
-                        s = t.simpleString() if t is not None else "string"
-                        if s in ("tinyint", "smallint", "int", "bigint"):
-                            return int(v)
-                        if s in ("float", "double"):
-                            return float(v)
-                        if s.startswith("decimal"):
-                            return _dec.Decimal(v)
-                        if s == "date":
-                            return _dt.date.fromisoformat(v)
-                        if s == "boolean":
-                            return v.lower() == "true"
-                        if s == "string":
-                            return v
-                        raise _FooterUnusable(f"partition type {s}")
-            raise _FooterUnusable(f"no path value for {col} in {d}")
+            try:
+                raw = partition_values(d, [col])[col]
+                return typed_value(raw, types.get(col) or StringType())
+            except (ValueError, NotImplementedError) as e:
+                raise _FooterUnusable(str(e)) from e
 
         def chunk_min_max(st, cc):
             """(min, max) of one column chunk, or None for an all-null
@@ -914,20 +897,7 @@ class SnapshotTable:
         if not v:
             raise ValueError(f"no committed versions at {self.root}")
         m = self.manifest(v)
-        live = m["live"]
-        if partitions:
-            bad = [c for c in partitions if c not in m["partition_cols"]]
-            if bad:
-                raise ValueError(f"not partition columns: {bad}")
-            wanted = {c: {str(x) for x in vs} for c, vs in partitions.items()}
-
-            def keep(d: str) -> bool:
-                segs = dict(
-                    s.split("=", 1) for s in d.split("/")[1:] if "=" in s
-                )
-                return all(segs.get(c) in vals for c, vals in wanted.items())
-
-            live = [d for d in live if keep(d)]
+        live = self._partition_filter(m, m["live"], partitions)
         rows = m.get("rows") or {}
         dvs = m.get("dvs") or []
         if dvs:
@@ -1803,22 +1773,48 @@ class SnapshotTable:
                 for d in live
                 if self._dir_survives(stats.get(d), where, rows_map.get(d))
             ]
-        if partitions:
-            bad = [c for c in partitions if c not in m["partition_cols"]]
-            if bad:
-                raise ValueError(f"not partition columns: {bad}")
-            wanted = {c: {str(v) for v in vs} for c, vs in partitions.items()}
-
-            def keep(d: str) -> bool:
-                segs = dict(
-                    s.split("=", 1) for s in d.split("/")[1:] if "=" in s
-                )
-                return all(
-                    segs.get(c) in vals for c, vals in wanted.items()
-                )
-
-            live = [d for d in live if keep(d)]
+        live = self._partition_filter(m, live, partitions)
         return self._read_state(m, live, schema)
+
+    @staticmethod
+    def _partition_filter(
+        m: dict, live: list[str], partitions: dict[str, list] | None
+    ) -> list[str]:
+        """The dirs of ``live`` whose decoded partition values match
+        ``partitions`` ({col: [values…]}, compared as strings; None
+        selects the NULL partition).  No filter keeps ``live`` as is."""
+        if not partitions:
+            return live
+        bad = [c for c in partitions if c not in m["partition_cols"]]
+        if bad:
+            raise ValueError(f"not partition columns: {bad}")
+        wanted = {
+            c: {None if v is None else str(v) for v in vs}
+            for c, vs in partitions.items()
+        }
+        return [
+            d
+            for d in live
+            if all(
+                v in wanted[c]
+                for c, v in partition_values(d, list(wanted)).items()
+            )
+        ]
+
+    def live_files(self, manifest: dict):
+        """Every parquet file of ``manifest``'s live set, dirs in sorted
+        order: ``(dir, name, abs_path, size, partition_values)``, where
+        ``abs_path`` resolves shallow-clone dirs against their external
+        base and the partition values are the decoded hive segments of
+        ``dir`` (None for a NULL partition)."""
+        ext = manifest.get("external") or {}
+        cols = manifest["partition_cols"]
+        for d in sorted(manifest["live"]):
+            abs_dir = f"{ext.get(d) or self.data_dir}/{d}"
+            pv = partition_values(d, cols)
+            for name, size in self.fs.list_files(abs_dir):
+                if name.endswith(".parquet"):
+                    yield d, name, f"{abs_dir}/{name}", size, pv
 
     def _read_dirs(
         self,

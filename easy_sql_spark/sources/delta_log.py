@@ -63,6 +63,12 @@ def _commit_versions(path: str) -> list[int]:
     return sorted(out)
 
 
+def _key_order(group: tuple) -> list:
+    """Sort key for ``(partition tuple, files)`` groups: a null
+    partition value sorts first instead of failing to compare."""
+    return [(v is not None, v or "") for v in group[0]]
+
+
 def _checkpoint_at_or_below(
     path: str, version: int
 ) -> tuple[int, list[str], str] | None:
@@ -545,7 +551,10 @@ def read_delta(
         bad = [c for c in partitions if c not in part_cols]
         if bad:
             raise ValueError(f"not partition columns: {bad}")
-        wanted = {c: {str(v) for v in vs} for c, vs in partitions.items()}
+        wanted = {
+            c: {None if v is None else str(v) for v in vs}
+            for c, vs in partitions.items()
+        }
         adds = {
             p: a
             for p, a in adds.items()
@@ -602,7 +611,10 @@ def read_delta(
         cols = [f.name for f in schema.fields]
         return df.select(*(cols + (["__dl_fp", "__dl_ri"] if with_meta else [])))
 
-    parts = [scan_group(k, fs, False) for k, fs in sorted(groups.items())]
+    parts = [
+        scan_group(k, fs, False)
+        for k, fs in sorted(groups.items(), key=_key_order)
+    ]
     if dv_groups:
         # files carrying a live deletion vector: scan with row-position
         # metadata and anti-join the deleted (file, position) set —
@@ -612,7 +624,10 @@ def read_delta(
         # positions ride a broadcast when bounded, a shuffle when not)
         from .delta_dv import dv_positions
 
-        dv_scans = [scan_group(k, fs, True) for k, fs in sorted(dv_groups.items())]
+        dv_scans = [
+            scan_group(k, fs, True)
+            for k, fs in sorted(dv_groups.items(), key=_key_order)
+        ]
         dv_df = dv_scans[0]
         for p in dv_scans[1:]:
             dv_df = dv_df.unionByName(p)
@@ -683,32 +698,14 @@ def export_snapshot_to_delta(
     if not snap_v:
         raise ValueError(f"no committed versions at {root}")
     m = table.manifest(snap_v)
-    part_cols = m["partition_cols"]
     ext = m.get("external") or {}
 
-    # current file set: {delta_path: (partitionValues, size, abs_path)}
-    current: dict[str, tuple[dict, int, str]] = {}
-    for d in m["live"]:
-        base = ext.get(d)
-        abs_dir = f"{base}/{d}" if base else f"{table.data_dir}/{d}"
-        segs = [s for s in d.split("/")[1:] if "=" in s]
-        # Spark escapes special chars in partition dir names (space,
-        # ':', '%', … via escapePathName) — unescape so the exported
-        # partitionValues carry the LOGICAL value, not the path form
-        from urllib.parse import unquote as _unquote
-
-        pv = {
-            k: _unquote(v)
-            for k, v in (s.split("=", 1) for s in segs)
-        }
-        pv = {c: pv.get(c) for c in part_cols}
-        for name, size in table.fs.list_files(abs_dir):
-            if not name.endswith(".parquet"):
-                continue
-            delta_path = (
-                f"{abs_dir}/{name}" if base else f"data/{d}/{name}"
-            )
-            current[delta_path] = (pv, size, f"{abs_dir}/{name}")
+    # current file set: {delta_path: (partitionValues, size, abs_path)};
+    # partitionValues carry the LOGICAL value (None for a NULL partition)
+    current: dict[str, tuple[dict, int, str]] = {
+        (path if d in ext else f"data/{d}/{name}"): (pv, size, path)
+        for d, name, path, size, pv in table.live_files(m)
+    }
 
     log_dir = _log_dir(root)
     os.makedirs(log_dir, exist_ok=True)
@@ -773,7 +770,7 @@ def export_snapshot_to_delta(
             "metaData": {
                 "id": f"snapshot-{os.path.basename(root)}",
                 "schemaString": m["schema"],
-                "partitionColumns": part_cols,
+                "partitionColumns": m["partition_cols"],
                 "format": {"provider": "parquet"},
                 "configuration": {},
             }
@@ -1210,7 +1207,7 @@ def delta_changes(
                 if with_ct
                 else data_schema
             )
-            for key, files in sorted(groups.items()):
+            for key, files in sorted(groups.items(), key=_key_order):
                 missing = [p for p in files if not os.path.exists(p)]
                 if missing:
                     raise ValueError(

@@ -836,24 +836,17 @@ def export_snapshot_to_hudi(
     current_fids: dict[str, str] = {}
 
     if not part_cols and not materialize:
-        ext = m.get("external") or {}
-        for d in m["live"]:
-            base = ext.get(d)
-            abs_dir = f"{base}/{d}" if base else f"{table.data_dir}/{d}"
-            for name, _size in table.fs.list_files(abs_dir):
-                if not name.endswith(".parquet"):
-                    continue
-                rel = f"{d}/{name}"
-                fid = fid_of(rel)
-                current_fids[fid] = ""
-                if fid in exported:
-                    continue  # unchanged file keeps its slice
-                link = os.path.join(dest, f"{fid}_{token}_{instant}.parquet")
-                try:
-                    os.link(f"{abs_dir}/{name}", link)
-                except OSError:
-                    shutil.copy2(f"{abs_dir}/{name}", link)
-                adds.setdefault("", []).append(fid)
+        for d, name, path, _size, _pv in table.live_files(m):
+            fid = fid_of(f"{d}/{name}")
+            current_fids[fid] = ""
+            if fid in exported:
+                continue  # unchanged file keeps its slice
+            link = os.path.join(dest, f"{fid}_{token}_{instant}.parquet")
+            try:
+                os.link(path, link)
+            except OSError:
+                shutil.copy2(path, link)
+            adds.setdefault("", []).append(fid)
         removes = {
             part: [f for f in (fid for fid, p in exported.items() if p == part)
                    if f not in current_fids]

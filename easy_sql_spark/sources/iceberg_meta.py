@@ -35,11 +35,11 @@ from __future__ import annotations
 
 import json
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..hive_path import partition_values
 from .avro_lite import read_avro_file
 
 
@@ -479,7 +479,10 @@ def read_iceberg(
         bad = [c for c in partitions if c not in id_parts]
         if bad:
             raise ValueError(f"not identity partition columns: {bad}")
-        wanted = {c: {str(v) for v in vs} for c, vs in partitions.items()}
+        wanted = {
+            c: {None if v is None else str(v) for v in vs}
+            for c, vs in partitions.items()
+        }
         ptypes = {f.name: f.dataType for f in schema.fields}
         files = [
             (p, pv, e, sq)
@@ -996,56 +999,40 @@ def export_snapshot_to_iceberg(table, dv_format: str = "parquet") -> dict:
         if isinstance(f["type"], str)
     }
     ids_by_name = {f["name"]: f["id"] for f in ice_schema["fields"]}
-    # unescape Spark's escapePathName encoding (space, ':', '%', …) so
-    # exported partition records carry the logical value (data files
-    # below and rewritten position-delete files further down)
-    from urllib.parse import unquote as _unquote
-
+    # partition records carry the logical value (None for a NULL
+    # partition), not the escaped path form
     entries = []
     n_files = 0
-    for d in sorted(m["live"]):
-        base = ext.get(d)
-        abs_dir = f"{base}/{d}" if base else f"{table.data_dir}/{d}"
-        segs = {
-            k: _unquote(v)
-            for k, v in (
-                s.split("=", 1) for s in d.split("/")[1:] if "=" in s
-            )
-        }
-        pv = {c: segs.get(c) for c in part_cols}
-        for name, size in table.fs.list_files(abs_dir):
-            if not name.endswith(".parquet"):
+    for d, _name, fpath, size, pv in table.live_files(m):
+        n_files += 1
+        lowers: dict[str, bytes] = {}
+        uppers: dict[str, bytes] = {}
+        for col, rng in (stats.get(d) or {}).items():
+            t = ice_types.get(col)
+            if t is None or rng[0] is None or rng[1] is None:
                 continue
-            n_files += 1
-            fpath = f"{abs_dir}/{name}"
-            lowers: dict[str, bytes] = {}
-            uppers: dict[str, bytes] = {}
-            for col, rng in (stats.get(d) or {}).items():
-                t = ice_types.get(col)
-                if t is None or rng[0] is None or rng[1] is None:
-                    continue
-                lo = _encode_bound(t, rng[0])
-                hi = _encode_bound(t, rng[1])
-                if lo is not None and hi is not None:
-                    lowers[str(ids_by_name[col])] = lo
-                    uppers[str(ids_by_name[col])] = hi
-            entries.append(
-                {
-                    "status": 1,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": fpath,
-                        "file_format": "PARQUET",
-                        "record_count": int(
-                            _pq.ParquetFile(fpath).metadata.num_rows
-                        ),
-                        "file_size_in_bytes": size,
-                        "lower_bounds": lowers,
-                        "upper_bounds": uppers,
-                        "partition": pv,
-                    },
-                }
-            )
+            lo = _encode_bound(t, rng[0])
+            hi = _encode_bound(t, rng[1])
+            if lo is not None and hi is not None:
+                lowers[str(ids_by_name[col])] = lo
+                uppers[str(ids_by_name[col])] = hi
+        entries.append(
+            {
+                "status": 1,
+                "data_file": {
+                    "content": 0,
+                    "file_path": fpath,
+                    "file_format": "PARQUET",
+                    "record_count": int(
+                        _pq.ParquetFile(fpath).metadata.num_rows
+                    ),
+                    "file_size_in_bytes": size,
+                    "lower_bounds": lowers,
+                    "upper_bounds": uppers,
+                    "partition": pv,
+                },
+            }
+        )
     manifest_path = os.path.join(meta_dir, f"manifest-{snapshot_id}.avro")
     with open(manifest_path, "wb") as f:
         f.write(
@@ -1095,29 +1082,12 @@ def export_snapshot_to_iceberg(table, dv_format: str = "parquet") -> dict:
                     "the default dv_format='parquet' (executor-side "
                     "rewrite) instead"
                 )
-            seg_re = re.compile(r"/commit=[^/]+/(.+)/[^/]*$")
             blobs = []
             ref_parts: list[dict] = []
             for r in sorted(grouped, key=lambda r: r.file_path):
-                if part_cols:
-                    m2 = seg_re.search(r.file_path)
-                    segs2 = {
-                        k: _unquote(v)
-                        for k, v in (
-                            s.split("=", 1)
-                            for s in (m2.group(1) if m2 else "").split("/")
-                            if "=" in s
-                        )
-                    }
-                    if sorted(segs2) != sorted(part_cols):
-                        raise ValueError(
-                            "puffin DV export could not derive the "
-                            f"partition tuple from {r.file_path!r} "
-                            f"(expected columns {part_cols})"
-                        )
-                    ref_parts.append({c: segs2[c] for c in part_cols})
-                else:
-                    ref_parts.append({})
+                ref_parts.append(
+                    partition_values(os.path.dirname(r.file_path), part_cols)
+                )
                 blobs.append(
                     (
                         "deletion-vector-v1",
@@ -1196,23 +1166,9 @@ def export_snapshot_to_iceberg(table, dv_format: str = "parquet") -> dict:
             for pdir_name in sorted(table.fs.list_names(out_dir)):
                 if not pdir_name.startswith("__pdir="):
                     continue
-                raw_segs = _unquote(pdir_name[len("__pdir=") :])
-                segs2 = {
-                    k: _unquote(v)
-                    for k, v in (
-                        s.split("=", 1)
-                        for s in raw_segs.split("/")
-                        if "=" in s
-                    )
-                }
-                if sorted(segs2) != sorted(part_cols):
-                    raise ValueError(
-                        "deletion-vector rewrite could not derive the "
-                        f"partition tuple from {raw_segs!r} (expected "
-                        f"columns {part_cols}) — a DV target file path "
-                        "does not carry the table's partition segments"
-                    )
-                pv2 = {c: segs2[c] for c in part_cols}
+                # the __pdir value is itself an escaped segment chain
+                pdir = partition_values(pdir_name, ["__pdir"])["__pdir"]
+                pv2 = partition_values(pdir or "", part_cols)
                 pdir_path = f"{out_dir}/{pdir_name}"
                 for name, size in table.fs.list_files(pdir_path):
                     if not name.endswith(".parquet"):

@@ -48,6 +48,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..hive_path import const_array, partition_values
+
 _META_FIELDS = [
     StructField("_change_type", StringType()),
     StructField("_commit_version", IntegerType()),
@@ -177,18 +179,7 @@ class SnapshotCDFStreamReader(DataSourceStreamReader):
             if f.endswith(".parquet")
         )
         # partition values ride the dir path (hive layout), not the files
-        segs = dict(
-            s.split("=", 1)
-            for s in partition.rel_dir.split("/")[1:]
-            if "=" in s
-        )
-        # arrow type for a constant partition column comes from the
-        # SPARK field type via pyspark's own mapping — a hand-rolled
-        # partial dict left date/boolean/decimal columns to pa.null()
-        # inference when all-NULL, the exact schema poisoning this
-        # explicit-type path exists to prevent (ADVICE r8 #3)
-        from pyspark.sql.pandas.types import to_arrow_type
-
+        pv = partition_values(partition.rel_dir, partition.part_cols)
         for fpath in files:
             t = pq.read_table(fpath)
             n = t.num_rows
@@ -204,44 +195,8 @@ class SnapshotCDFStreamReader(DataSourceStreamReader):
                 names.append(field.name)
                 if field.name in t.column_names:
                     cols.append(t[field.name].combine_chunks())
-                else:  # partition column: constant from the path
-                    raw = segs.get(field.name)
-                    if raw == "__HIVE_DEFAULT_PARTITION__":
-                        raw = None  # hive spelling of a NULL value
-                    elif raw is not None:
-                        from urllib.parse import unquote
-
-                        raw = unquote(raw)
-                    typ = field.dataType.simpleString()
-                    val: object = raw
-                    if raw is not None:
-                        if typ in ("int", "bigint", "smallint", "tinyint"):
-                            val = int(raw)
-                        elif typ in ("double", "float"):
-                            val = float(raw)
-                        elif typ == "boolean":
-                            val = raw.lower() == "true"
-                        elif typ == "date":
-                            import datetime as _dt
-
-                            val = _dt.date.fromisoformat(raw)
-                        elif typ.startswith("decimal"):
-                            import decimal as _dec
-
-                            val = _dec.Decimal(raw)
-                        elif typ != "string":
-                            raise NotImplementedError(
-                                f"CDF partition column {field.name!r} of "
-                                f"type {typ}"
-                            )
-                    # explicit arrow type: an all-NULL constant column
-                    # must not infer pa.null() in one batch and clash
-                    # with a typed one in the next
-                    cols.append(
-                        pa.array(
-                            [val] * n, type=to_arrow_type(field.dataType)
-                        )
-                    )
+                else:  # partition column (or absent from an old file)
+                    cols.append(const_array(field, pv.get(field.name), n))
             cols.append(pa.array([partition.change] * n, type=pa.string()))
             cols.append(pa.array([partition.version] * n, type=pa.int32()))
             names += ["_change_type", "_commit_version"]

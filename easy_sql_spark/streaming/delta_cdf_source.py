@@ -29,7 +29,7 @@ Design (same contract as the sibling sources):
   ``metaData`` action inside the stream (CDF schema evolution), and a
   vacuumed remove-side file — never a silent wrong answer.
 - ``read`` runs ON EXECUTORS without a SparkSession: pyarrow file
-  scans, logical renames, typed constants (streaming/arrow_consts.py).
+  scans, logical renames, typed constants (hive_path.const_array).
 - ``starting_version`` mirrors Delta's startingVersion (changes
   strictly AFTER it; default = latest at stream start);
   ``max_versions_per_batch`` bounds backlog drain, restart-safe via
@@ -57,6 +57,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..hive_path import const_array, partition_values
 from ..sources.delta_log import (
     _check_protocol,
     _column_mapping,
@@ -64,30 +65,6 @@ from ..sources.delta_log import (
     _log_dir,
     delta_latest_version,
 )
-
-
-def _part_values_from_path(rel_path: str) -> dict:
-    """Recover partitionValues from a hive-style relative file path
-    (``col=value/.../part-*.parquet``).  A ``remove`` action written
-    without extendedFileMetadata (legal per the Delta PROTOCOL.md) has
-    no partitionValues field; most writers still lay files out
-    hive-style, so the path carries them.  Values are path-unescaped;
-    ``__HIVE_DEFAULT_PARTITION__`` is the null sentinel.
-
-    Paths are assumed Hive-escaped (Spark/Hive ``escapePathName``
-    always %-escapes ``%`` itself): a literal ``%`` in a partition
-    value must arrive as ``%25``.  A non-escaping foreign writer whose
-    raw value contains ``%`` followed by hex digits would be
-    mis-decoded here — out of contract (ADVICE r12)."""
-    from urllib.parse import unquote
-
-    out: dict = {}
-    for seg in rel_path.split("/")[:-1]:
-        if "=" not in seg:
-            continue
-        k, v = seg.split("=", 1)
-        out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-    return out
 
 
 def _latest_metadata_sessionless(path: str) -> tuple[dict, dict | None]:
@@ -256,19 +233,21 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
                             "actions without extendedFileMetadata — "
                             "malformed writer, refusing to guess"
                         )
-                    pvals = _part_values_from_path(action["path"])
-                    missing = [
-                        c for c in self._part_cols
-                        if self._phys_of.get(c, c) not in pvals
-                    ]
-                    if missing:
+                    # recover them from a hive-style path (Spark/Hive
+                    # ``escapePathName`` always %-escapes ``%`` itself,
+                    # so a non-escaping writer is out of contract)
+                    try:
+                        pvals = partition_values(
+                            os.path.dirname(action["path"]),
+                            [self._phys_of.get(c, c) for c in self._part_cols],
+                        )
+                    except ValueError as e:
                         raise ValueError(
                             f"commit {v} {kind} action for "
                             f"{action['path']} carries no partitionValues "
-                            f"and the path is not hive-style for "
-                            f"partition column(s) {missing}; refusing to "
-                            "stream NULL partition values"
-                        )
+                            f"and the path is not hive-style ({e}); "
+                            "refusing to stream NULL partition values"
+                        ) from e
                 return _DeltaCdfPartition(
                     fp, kind, v, ts, pvals,
                     self._schema.json(), self._part_cols, self._phys_of,
@@ -296,8 +275,6 @@ class DeltaCdfStreamReader(DataSourceStreamReader):
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_type
         from pyspark.sql.types import _parse_datatype_json_string
-
-        from .arrow_consts import const_array
 
         schema = _parse_datatype_json_string(partition.schema_json)
         t = pq.read_table(partition.file_path)

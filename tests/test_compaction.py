@@ -112,3 +112,34 @@ def test_compact_preserves_partition_pruning(spark):
     assert scanned.count() == 16
     files = scanned.select("id").inputFiles()
     assert files and all("dt=a" in f for f in files)
+
+
+def test_compact_null_partition(spark):
+    """The NULL partition (dir ``pt=__HIVE_DEFAULT_PARTITION__``) is
+    compacted too: its spec decodes to None and matches its rows
+    null-safely."""
+    from easy_sql_spark.runtime.backend import SparkBackend
+
+    spark.sql("drop database if exists cmp5 cascade")
+    spark.sql("create database cmp5")
+    spark.sql(
+        "create table cmp5.t (id int) using parquet partitioned by (pt string)"
+    )
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    for i in range(5):
+        pt = "null" if i % 2 == 0 else "'a'"
+        spark.range(i * 10, i * 10 + 10).selectExpr(
+            "cast(id as int) as id", f"cast({pt} as string) as pt"
+        ).write.insertInto("cmp5.t")
+    before = _files_by_part(spark, "cmp5.t")
+    assert set(before) == {"pt=__HIVE_DEFAULT_PARTITION__", "pt=a"}
+    assert all(len(fs) >= 4 for fs in before.values())
+
+    report = SparkBackend(spark).compact_table("cmp5.t", min_files=4)
+    assert report["partitions_compacted"] == 2
+    after = _files_by_part(spark, "cmp5.t")
+    assert {k: len(v) < 4 for k, v in after.items()} == {
+        "pt=__HIVE_DEFAULT_PARTITION__": True, "pt=a": True,
+    }
+    assert spark.table("cmp5.t").count() == 50
+    assert spark.table("cmp5.t").where("pt is null").count() == 30

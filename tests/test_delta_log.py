@@ -463,6 +463,37 @@ def test_export_snapshot_to_delta_roundtrip(spark, tmp_path):
     assert got == {(9, "w", "a"), (2, "y", "b"), (7, "q", "b")}
 
 
+@pytest.mark.parametrize("pt_type", ["string", "int"])
+def test_export_null_partition_is_null(spark, tmp_path, pt_type):
+    """A NULL partition (dir ``pt=__HIVE_DEFAULT_PARTITION__``) exports
+    as a null partitionValue: ``read_delta`` returns exactly the
+    snapshot's rows, for a string and an int partition column alike."""
+    from easy_sql_spark.runtime.snapshots import SnapshotTable
+    from easy_sql_spark.sources.delta_log import export_snapshot_to_delta
+
+    t = SnapshotTable(spark, str(tmp_path / "snap"))
+    t.create(
+        spark.createDataFrame(
+            [(1, "1"), (2, "2"), (3, None), (4, None)], "id int, pt string"
+        ).selectExpr("id", f"cast(pt as {pt_type}) pt"),
+        partition_by=["pt"],
+    )
+    export_snapshot_to_delta(t)
+
+    def rows(df):
+        return sorted((r.id, r.pt) for r in df.collect())
+
+    assert rows(read_delta(spark, t.root)) == rows(t.read())
+    assert (3, None) in rows(t.read())
+    with open(os.path.join(t.root, "_delta_log", f"{0:020d}.json")) as f:
+        pvs = [
+            json.loads(line)["add"]["partitionValues"]
+            for line in f
+            if '"add"' in line
+        ]
+    assert {"pt": None} in pvs
+
+
 def test_export_delta_step_function(spark, tmp_path):
     from easy_sql_spark.runtime.processor import SqlProcessor
 

@@ -641,6 +641,33 @@ def test_export_snapshot_to_iceberg_roundtrip(spark, tmp_path):
     } == {1, 2, 3}
 
 
+@pytest.mark.parametrize("pt_type", ["string", "int"])
+def test_export_null_partition_is_null(spark, tmp_path, pt_type):
+    """A NULL partition (dir ``pt=__HIVE_DEFAULT_PARTITION__``) exports
+    as a null partition record: ``read_iceberg`` returns exactly the
+    snapshot's rows, for a string and an int partition column alike,
+    and ``partitions={"pt": [None]}`` selects it."""
+    from easy_sql_spark.runtime.snapshots import SnapshotTable
+    from easy_sql_spark.sources.iceberg_meta import export_snapshot_to_iceberg
+
+    t = SnapshotTable(spark, str(tmp_path / "snap"))
+    t.create(
+        spark.createDataFrame(
+            [(1, "1"), (2, "2"), (3, None), (4, None)], "id int, pt string"
+        ).selectExpr("id", f"cast(pt as {pt_type}) pt"),
+        partition_by=["pt"],
+    )
+    export_snapshot_to_iceberg(t)
+
+    def rows(df):
+        return sorted((r.id, r.pt) for r in df.collect())
+
+    assert rows(read_iceberg(spark, t.root)) == rows(t.read())
+    assert (3, None) in rows(t.read())
+    got = rows(read_iceberg(spark, t.root, partitions={"pt": [None]}))
+    assert got == [(3, None), (4, None)]
+
+
 def test_export_iceberg_step_function(spark, tmp_path):
     from easy_sql_spark.runtime.processor import SqlProcessor
 

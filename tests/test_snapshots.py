@@ -1153,6 +1153,29 @@ def test_row_count_metadata_only(spark, root):
     assert t.row_count() == 24
 
 
+def test_partition_filters_match_logical_values(spark, root):
+    """Partition filters compare the LOGICAL value: Spark writes ``10:00``
+    as the dir ``pt=10%3A00`` and NULL as ``__HIVE_DEFAULT_PARTITION__``;
+    ``read`` and ``row_count`` must still select them by ``"10:00"`` and
+    ``None``."""
+    t = SnapshotTable(spark, root)
+    t.create(
+        _df(
+            spark,
+            [(1, "10:00"), (2, "10:00"), (3, "10:00"), (4, "plain"),
+             (5, None), (6, None)],
+            "id int, pt string",
+        ),
+        partition_by=["pt"],
+    )
+    assert any("pt=10%3A00" in d for d in t.manifest(1)["live"])
+    spec = {"pt": ["10:00"]}
+    assert t.read(partitions=spec).count() == 3
+    assert t.row_count(partitions=spec) == 3
+    assert {r.id for r in t.read(partitions={"pt": [None]}).collect()} == {5, 6}
+    assert t.row_count(partitions={"pt": [None, "plain"]}) == 3
+
+
 def test_shallow_clone_independence_and_materialize(spark, root):
     t = SnapshotTable(spark, root)
     t.create(
